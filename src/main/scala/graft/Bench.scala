@@ -100,17 +100,13 @@ object Bench {
         "override deliberately.")
       sys.exit(2)
     }
-    // GraftSession.tune: the engine's standard confs (UTC, nanos, zstd
+    // GraftSession.local: the engine's standard confs (UTC, nanos, zstd
     // output) — hand-copied configs here drifted from it once already
-    val spark = GraftSession.tune(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        // test tables are single-file single-row-group parquet, which
-        // scans as ONE task; the floor restores scan parallelism (no-op
-        // on real multi-row-group lakes — see Tables.withScanFloor)
-        .config("spark.graft.scan.minPartitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
+    // test tables are single-file single-row-group parquet, which
+    // scans as ONE task; the floor restores scan parallelism (no-op
+    // on real multi-row-group lakes — see Tables.withScanFloor)
+    spark.conf.set("spark.graft.scan.minPartitions", cpus)
     spark.sparkContext.setLogLevel("WARN")
     val vol = new VolumeListener
     spark.sparkContext.addSparkListener(vol)

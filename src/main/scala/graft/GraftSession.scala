@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Shared tuning applied to any builder. zstd parquet output: at a
+  /** Shared tuning of every graft session. zstd parquet output: at a
     * 100 TB lake the scan is IO-bound, so zstd's materially better
     * ratio at near-snappy speed means fewer bytes read AND stored —
     * Spark 4 bundles the codec, nothing to install.
@@ -36,11 +36,14 @@ object GraftSession {
     * below it — while big shuffles keep up to 256 reducers and stay
     * in memory. On a real cluster this scales with executor count;
     * 256 is the right headroom for one 32-core node. */
-  def tune(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
+  private val Confs = Map(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.compression.codec" -> "zstd",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "256")
+
+  /** Applies the shared tuning to any builder. */
+  def tune(b: SparkSession.Builder): SparkSession.Builder = b.config(Confs)
 
   /** Local development/test session: `local[cores]`, shuffle partitions
     * = cores, UI off.
@@ -55,12 +58,8 @@ object GraftSession {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
       case Some(existing) =>
         val s = existing.newSession()
-        s.conf.set("spark.sql.session.timeZone", "UTC")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        s.conf.set("spark.sql.parquet.compression.codec", "zstd")
+        Confs.foreach { case (k, v) => s.conf.set(k, v) }
         s.conf.set("spark.sql.shuffle.partitions", cores.toString)
-        s.conf.set(
-          "spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
         GraftExtensions.install(s)
         s
       case None =>

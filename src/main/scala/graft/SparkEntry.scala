@@ -17,67 +17,6 @@ import graft.query.{NLTranslator, QueryCompiler}
   */
 object SparkEntry {
 
-  /** PQ codebooks captured when q110/q112 run (training is
-    * seeded-deterministic, so the capture is a pure function of the
-    * data dir). [[Verify]] runs every query BEFORE dumping
-    * [[oracleSql]], so the dynamic PQ oracles see the books that
-    * actually encoded the dump; if the queries never ran (partial
-    * local `only` runs) the entries are simply omitted and the driver
-    * falls back to its rows-only record — never a stale or wrong SQL.
-    */
-  // Every tunable the oracle must replay rides the capture alongside
-  // the trained params — a knob edited at the registry call site can
-  // never silently leave the generated SQL replaying the old value.
-  @volatile private var pqBooks110: Option[Array[Array[Array[Double]]]] = None
-  @volatile private var pqBooks112: Option[Array[Array[Array[Double]]]] = None
-  /** (books, k·refine) */
-  @volatile private var pqBooks115
-      : Option[(Array[Array[Array[Double]]], Int)] = None
-  /** (centroids, nProbe) */
-  @volatile private var ivfCentroids40
-      : Option[(Array[Array[Double]], Int)] = None
-  /** (centroids, books, nProbe, k·refine) */
-  @volatile private var ivfPq116
-      : Option[(Array[Array[Double]], Array[Array[Array[Double]]], Int, Int)] =
-    None
-  /** ((media_id, dhash) fingerprints, maxHamming) — image decode is not
-    * SQL-expressible, so the q120 oracle replays the Hamming pairing
-    * over the captured fingerprint table. */
-  @volatile private var imageFp120: Option[(Array[(Long, Long)], Int)] = None
-  @volatile private var audioFp130: Option[(Array[(Long, Long)], Int)] = None
-  /** (centroids, tau) — q121 SemDeDup replays assignment, within-cell
-    * pairing and the keep policy from the captured centroids. */
-  @volatile private var semCtrs121
-      : Option[(Array[Array[Double]], Double)] = None
-  /** (weights, bias) — q148 trains the logistic regression in-engine
-    * and the oracle replays SCORING with the captured snapped weights
-    * (retraining in SQL is neither possible nor the contract). */
-  @volatile private var trainedLr148: Option[(Array[Double], Double)] = None
-  /** Per-fold (fold, weights, bias) — q153 cross-validates the trainer
-    * and the oracle replays each fold's SCORING with its captured
-    * snapped weights, then the integer-exact rank-AUC fold. */
-  @volatile private var trainedCv153
-      : Option[Seq[(Int, Array[Double], Double)]] = None
-  /** (means, axes) — q168 estimates the PCA basis in-engine (float
-    * covariance sums are shuffle-order-dependent, so the basis is a
-    * per-run capture) and the oracle replays the PROJECTION with the
-    * captured literals. */
-  @volatile private var pcaBasis168
-      : Option[(Array[Double], Array[Array[Double]])] = None
-  /** (weights, bias) — q170 calibrates q148's trained scorer (same
-    * memoized model); the oracle replays scoring + binning. */
-  @volatile private var calibLr170: Option[(Array[Double], Double)] = None
-  /** (weights, bias) — q173 audits the same scorer per language; the
-    * oracle replays scoring + the integer rank-AUC fold per group. */
-  @volatile private var biasLr173: Option[(Array[Double], Double)] = None
-  /** (rank, left, right) trained merges — q176 encodes the corpus with
-    * the in-engine-trained BPE merge table and the oracle replays the
-    * ENCODE fold merge-for-merge from the captured merges (one
-    * `replace` per rank over a noncharacter-separated symbol string —
-    * SQL replace is the same non-overlapping left-to-right pass as the
-    * trainer's applyMerge). */
-  @volatile private var bpeMerges176: Option[Seq[(Int, String, String)]] = None
-
   /** Deterministic-trainer memo: every trainer here is a pure function
     * of (data dir, params) — seeded KMeans over a seeded hash-sample —
     * so one JVM running many queries (Verify, Bench) trains each model
@@ -90,12 +29,32 @@ object SparkEntry {
   private def memoTrain[T <: AnyRef](key: String)(f: => T): T =
     trainerMemo.computeIfAbsent(key, _ => f).asInstanceOf[T]
 
-  /** The planted bigrams that define q148/q170's truth label — ONE
-    * list shared by both bindings and both oracle builders. */
+  /** The seeded IVF coarse quantizer over the 64-dim embeddings. */
+  private def ivfCentroids(emb: DataFrame, dir: String,
+                           nCells: Int): Array[Array[Double]] =
+    memoTrain(s"ivf$nCells:$dir") {
+      graft.ext.Similarity.trainIvfCentroids(
+        emb, "vec_id", "embedding", nCells = nCells,
+        trainFraction = 0.25, seed = 42L, dim = 64)
+    }
+
+  /** Seeded raw-vector PQ codebooks (`m` subspaces × 16 codes) over the
+    * 64-dim embeddings. */
+  private def pqCodebooks(emb: DataFrame, dir: String,
+                          m: Int): Array[Array[Array[Double]]] =
+    memoTrain(s"pq$m:$dir") {
+      graft.ext.Similarity.trainPqCodebooks(
+        emb, "vec_id", "embedding", dim = 64, m = m, k = 16,
+        trainFraction = 0.25, seed = 42L)
+    }
+
+  /** The planted bigrams that define the truth label of the trained
+    * scorer (q148, q153, q170, q173) — ONE list shared by every binding
+    * and every oracle builder. */
   private val Planted148 = Seq("spark join", "data table", "big data",
     "fast scan", "hash join", "stream batch", "key value", "slow query")
 
-  /** The q148/q170 truth label as a bare column, so single-pass
+  /** The planted truth label as a bare column, so single-pass
     * consumers (score + label in ONE projection, round 14) and the
     * training-input frame below can never drift apart. */
   private def lr148LabelCol: org.apache.spark.sql.Column =
@@ -109,11 +68,12 @@ object SparkEntry {
 
   /** The q148 trained model, memoized per data dir so q170's
     * calibration audit scores with the SAME weights q148 captured. */
-  private def lr148Model(dir: String, docs: DataFrame,
-                         truth: DataFrame): graft.ext.Training.TrainedLogReg =
+  private def lr148Model(dir: String,
+                         docs: DataFrame): graft.ext.Training.TrainedLogReg =
     memoTrain(s"lr148:$dir") {
       graft.ext.Training.trainLogReg(
-        docs.join(truth, Seq("doc_id")).filter(col("doc_id") < 20000),
+        docs.join(lr148TruthDF(docs), Seq("doc_id"))
+          .filter(col("doc_id") < 20000),
         "text", "label", buckets = 4096, maxIter = 100)
     }
 
@@ -153,8 +113,378 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every registered line: the [[staticLines]] plus the DataFrames of
+    * the [[capturedLines]]. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    staticLines ++ capturedLines.map { case (name, line) =>
+      name -> ((s: SparkSession, dir: String) => line(s, dir)._1) }
+
+  /** Lines whose oracle replays, as SQL literals, values the line
+    * computed (trained books, centroids, weights, fingerprints, a PCA
+    * basis, BPE merges). Each returns its DataFrame with a thunk that
+    * renders that oracle on request, so building a line for [[queries]]
+    * renders nothing. [[Verify]] collects the oracles of the lines it
+    * ran; a line that did not run (partial `only` runs) has none, and
+    * the driver falls back to its rows-only record — never a stale or
+    * wrong SQL.
+    */
+  // Every tunable the oracle must replay rides the thunk alongside
+  // the trained params — a knob edited at the registry call site can
+  // never silently leave the generated SQL replaying the old value.
+  def capturedLines
+      : Map[String, (SparkSession, String) => (DataFrame, () => String)] = Map(
+    // --- Similarity: IVF ANN (k-means coarse quantizer + cell probing).
+    // Training is seeded-deterministic, so the centroids are CAPTURED
+    // and the whole assign/probe/rank replays in DuckDB — full hash
+    // oracle, no longer rows-only. Recall floor in SimilaritySpec.
+    "q40_ivf_topk" -> ((s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val ctrs = ivfCentroids(emb, dir, nCells = 16)
+      // library-default nProbe (8/16): the spec's 0.9 recall floor
+      val nProbe = 8
+      val oracle = () => ivfTopkOracleSql(ctrs, nProbe)
+      (graft.ext.Similarity.ivfCosineTopKWith(
+          emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
+          k = 10, nProbe, ctrs)
+        .select(col("qid"), col("id"),
+          graft.functions.Rounding.reprRound6(col("cosine")).as("cosine"),
+          col("rank")), oracle)
+    }),
+
+    // --- Product quantization: m codebook codes per vector (m·log2 k
+    // bits vs 32·dim — the compression that puts 1e9 vectors in RAM),
+    // plus the reconstruction audit. Codes dump as a "-"-joined STRING:
+    // an array column would crash the driver's rows-only sort (pandas
+    // can't order ndarrays — seen in CORRECTNESS_r04), and the captured
+    // codebooks give the oracle a full argmin-encode replay anyway.
+    "q110_pq_encode" -> ((s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val books = pqCodebooks(emb, dir, m = 8)
+      val oracle = () => pqEncodeOracleSql(books)
+      (graft.ext.Similarity.pqQuantizeWith(emb, "vec_id", "embedding", 64, books)
+        .select(col("vec_id"), concat_ws("-", col("codes")).as("codes"),
+          col("mse"), col("cos_q")), oracle)
+    }),
+
+    // --- PQ-ADC approximate top-k: rank from 4-byte codes alone (the
+    // 1e9-vector scan shape). Training is seeded-deterministic, so the
+    // trained books are CAPTURED and replayed as a DuckDB literal table
+    // (the q24 pattern) — full hash oracle, not rows-only.
+    "q112_pq_topk" -> ((s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      // m = 4 subspaces: codebook training is m driver-sequenced
+      // k-means fits, the whole cost of this query at bench scale —
+      // 4×16-dim books keep the ADC shape at half the fits
+      val books = pqCodebooks(emb, dir, m = 4)
+      val oracle = () => pqTopkOracleSql(books)
+      (graft.ext.Similarity.pqCosineTopKWith(
+          emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
+          k = 10, dim = 64, books)
+        .select(col("qid"), col("id"),
+          graft.functions.Rounding.reprRound6(col("cosine_adc"))
+            .as("cosine_adc"), col("rank")), oracle)
+    }),
+
+    // --- PQ-ADC search + exact re-rank: codes-only scan keeps
+    // k*refine candidates, true vectors re-score ONLY those (broadcast
+    // candidate ids — full vectors never shuffle). The two-stage shape
+    // every production ANN runs at 1e9 vectors; recall floor 0.9 in
+    // SimilaritySpec. Same captured-codebook oracle replay as q112.
+    "q115_pq_refined" -> ((s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      // m=16/refine=16: what the near-random fixture needs for the 0.9
+      // recall floor (SimilaritySpec has the measured sweep)
+      val books = pqCodebooks(emb, dir, m = 16)
+      val (k, refine) = (10, 16)
+      val oracle = () => pqRefinedOracleSql(books, k * refine)
+      (graft.ext.Similarity.pqCosineTopKRefinedWith(
+          emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
+          k, dim = 64, books, refine)
+        .select(col("qid"), col("id"),
+          graft.functions.Rounding.reprRound6(col("cosine")).as("cosine"),
+          col("rank")), oracle)
+    }),
+
+    // --- IVF-PQ ANN (the FAISS IVFADC composition): one scan builds
+    // the (cell, codes, norm) index; queries probe nProbe cells, score
+    // members from CODES alone, exact-rerank the ADC top-(k*refine).
+    // Codebooks are RESIDUAL-trained (v - centroid(cell)) at m=8 —
+    // HALF the m=16 raw-book code budget this entry used pre-residual,
+    // same 0.94 recall@10 at nProbe=10 (measured sweep in
+    // SimilaritySpec). Both trainers captured -> full DuckDB replay.
+    "q116_ivf_pq" -> ((s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val ctrs = ivfCentroids(emb, dir, nCells = 16)
+      val books = memoTrain(s"pqres8:$dir") {
+        graft.ext.Similarity.trainPqCodebooks(
+          graft.ext.Similarity.ivfResiduals(
+            emb, "vec_id", "embedding", 64, ctrs),
+          "id", "rv", dim = 64, m = 8, k = 16,
+          trainFraction = 0.25, seed = 42L)
+      }
+      val (k, nProbe, refine) = (10, 10, 16)
+      val oracle = () => ivfPqOracleSql(ctrs, books, nProbe, k * refine)
+      (graft.ext.Similarity.ivfPqTopKWith(
+          emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
+          k, dim = 64, nProbe, ctrs, books, refine)
+        .select(col("qid"), col("id"),
+          graft.functions.Rounding.reprRound6(col("cosine")).as("cosine"),
+          col("rank")), oracle)
+    }),
+
+    // --- Multimodal: image-CONTENT dedup — the perceptual twin of q18.
+    // Every doc becomes a REAL 16x16 BMP (ids ≡ 3 mod 7 are planted
+    // +8-brightness RE-ENCODINGS of their predecessor); the JDK codec
+    // decodes actual pixels, deterministic integer dHash fingerprints
+    // them, and the shared 4x16-banded Hamming join pairs near-dups —
+    // re-encoded/brightness-shifted duplicate images that byte-level
+    // digests (q15) sail past. The oracle replays the pairing in SQL
+    // over the CAPTURED fingerprints (the decode itself is not
+    // SQL-expressible; the capture is the narrow 16 B/image frame the
+    // plan shuffles anyway, collected ONLY to render the oracle).
+    "q120_image_phash_dedup" -> ((s, dir) => {
+      val media = graft.ext.Multimodal.bmpImageTable(Tables.documents(s, dir))
+      // fingerprints feed the capture AND both join sides: eager
+      // checkpoint once (the SCALE.md multi-consumer rule)
+      val fp = graft.ext.Multimodal.imagePerceptualHash(media).toDF()
+        .filter(col("dhash").isNotNull)
+        .select(col("media_id"), col("dhash"))
+        .localCheckpoint(eager = true)
+      val maxHamming = 2
+      val oracle = () => fingerprintHammingOracleSql(fp, maxHamming)
+      (graft.ext.Dedup.hammingPairs64(fp, "media_id", "dhash", maxHamming),
+        oracle)
+    }),
+
+    // --- SemDeDup (Abbas et al. 2023): k-means cells (q40's captured
+    // 16-cell coarse quantizer, shared via the trainer memo) block the
+    // pair search; within-cell exact cosine >= tau merges semantic
+    // duplicates; each group keeps the member FARTHEST from its
+    // centroid. Contrast with q104: learned semantic blocking vs
+    // random-hyperplane blocking — cross-cell near-dups stay apart by
+    // design. Captured centroids -> full DuckDB replay (assignment,
+    // pairing, recursive closure, keep policy).
+    "q121_semdedup" -> ((s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      // constant-occupancy cell count (the adaptivePlanes audit rule):
+      // fixed 16 cells would make within-cell pairing quadratic in the
+      // corpus; at the oracle SFs the formula still yields 16, sharing
+      // q40's memoized quantizer and keeping outputs byte-identical
+      val k = graft.ext.Similarity.adaptiveCells(emb.count())
+      val ctrs = ivfCentroids(emb, dir, nCells = k)
+      val tau = 0.45
+      val oracle = () => semDedupOracleSql(ctrs, tau)
+      (graft.ext.Dedup.semDedupWith(emb, "vec_id", "embedding", ctrs, tau),
+        oracle)
+    }),
+
+    // --- Multimodal: audio-CONTENT dedup — the audio twin of q120.
+    // Every doc becomes a REAL mono 16-bit PCM WAV (ids ≡ 3 mod 7 are
+    // planted RE-ENCODINGS of their predecessor: half sample rate,
+    // half gain — different bytes, different header, same content);
+    // the 65-segment energy-envelope fingerprint is invariant to
+    // resampling and uniform gain, and the shared 4x16-banded Hamming
+    // join pairs the re-encoded duplicates byte digests sail past.
+    // Oracle replays the pairing over the CAPTURED fingerprints.
+    "q130_audio_phash_dedup" -> ((s, dir) => {
+      val media = graft.ext.Multimodal.wavAudioTable(Tables.documents(s, dir))
+      val fp = graft.ext.Multimodal.audioPerceptualHash(media).toDF()
+        .filter(col("afp").isNotNull)
+        .select(col("media_id"), col("afp"))
+        .localCheckpoint(eager = true)
+      val maxHamming = 3
+      val oracle = () => fingerprintHammingOracleSql(fp, maxHamming)
+      (graft.ext.Dedup.hammingPairs64(fp, "media_id", "afp", maxHamming),
+        oracle)
+    }),
+
+    // --- In-engine classifier TRAINING (closes the q128 loop: the
+    // pipeline now PRODUCES its quality filter, not just applies one):
+    // logistic regression over the scorer's exact hashed unigram+bigram
+    // features, trained on a FIXED 20k-doc slice (each epoch is a full
+    // pass over the training set — sample-sized by the trainLogReg row
+    // gate, never corpus-sized), then deployed over the FULL corpus as
+    // the same zero-shuffle codegen expression q128 uses. Truth = a
+    // PLANTED 8-bigram disjunction (~36% positive at every SF) — a
+    // signal the feature space genuinely carries, so the trainer must
+    // isolate those bigram buckets against hash-collision noise.
+    // (Neither of the corpus's metadata labels is learnable from BoW:
+    // the q140 rule gate is length-shaped and the mean normalization
+    // removes length; `lang` is uncorrelated with the shared synthetic
+    // vocabulary — both measured at the all-one-class prior.) Oracle
+    // replays SCORING with the captured snapped weights (the q40/q110
+    // captured-params pattern; retraining in SQL is neither possible
+    // nor the contract); the label is a trivial replay.
+    "q148_trained_classifier" -> ((s, dir) => {
+      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
+      val model = lr148Model(dir, docs)
+      val oracle = () => trainedClassifierOracleSql(model.weights, model.bias)
+      // Round 14: label, score and pred ride ONE map projection (the
+      // q173 convention) instead of re-scanning for the truth frame
+      // and joining on doc_id (1:1 — doc_id unique). The raw score
+      // CSEs into a single evaluation; every value is unchanged.
+      val raw = graft.functions.Classifier.hashedNgramScore(
+        lower(col("text")), model.weights, model.bias)
+      (docs.select(col("doc_id"), lr148LabelCol.as("label"),
+        graft.functions.Rounding.reprRound6(raw).as("score"),
+        (raw > 0).cast("int").as("pred")), oracle)
+    }),
+
+    // --- Seeded k-fold cross-validation of the in-engine trainer: the
+    // eval loop that picks a quality filter WITHOUT measuring it on
+    // its own training data (q148 trains once; this answers "do the
+    // learned weights generalize or memorize"). Folds are a salted
+    // doc-id hash — honest here because the metric slice carries the
+    // q148 planted labels; on an undeduplicated corpus pass q133's
+    // component labels as the fold source instead (kFoldLogReg's
+    // foldCol), or a held-out twin inflates every metric. Each fold
+    // trains on the complement under trainLogReg's sample-size gate;
+    // scoring is ONE scan whose projection switches weight vectors by
+    // fold (weights ride codegen as reference objects), and AUC /
+    // accuracy stay integer arithmetic until a single division
+    // (Training.binaryMetrics) — engine-exact, no float snap at all.
+    // The oracle replays each fold's SCORING with its captured snapped
+    // weights, then the same integer-exact rank-AUC fold.
+    "q153_kfold_cv" -> ((s, dir) => {
+      val labeled = Tables.documents(s, dir)
+        .filter(col("text").isNotNull && col("doc_id") < 20000)
+        .withColumn("label", lr148LabelCol)
+      val models = memoTrain(s"cv153:$dir") {
+        graft.ext.Training.kFoldLogReg(labeled, "doc_id", "text", "label",
+          k = 3, buckets = 1024, maxIter = 100)
+      }
+      val oracle = () => kfoldCvOracleSql(models.map { case (i, m) =>
+        (i, m.weights, m.bias) })
+      val withFold = labeled.withColumn("fold",
+        graft.ext.Training.foldColumn(col("doc_id"), 3))
+      val score = models.foldLeft(lit(null).cast("double")) {
+        case (acc, (i, m)) =>
+          when(col("fold") === i,
+            graft.functions.Classifier.hashedNgramScore(
+              lower(col("text")), m.weights, m.bias)).otherwise(acc)
+      }
+      (graft.ext.Training.binaryMetrics(
+          withFold.withColumn("score", score),
+          "label", "score", groupCols = Seq("fold"))
+        .select(col("fold"), col("n").as("n_test"), col("n_pos"),
+          col("auc"), col("accuracy")), oracle)
+    }),
+
+    // --- PCA projection: the data-adapted reduction next to q144's
+    // oblivious JL — basis from one distributed covariance pass
+    // (dim×dim eigenproblem on the driver, the tall-skinny shape),
+    // sign-canonicalized; the projection is the same codegen'd
+    // ascending-index matVec fold q144 uses, with the centering folded
+    // into one literal per axis. Basis captured → oracle replays the
+    // projection with the captured literals (the q40/q110 pattern).
+    // The basis is not memoized: its float covariance sums are
+    // shuffle-order-dependent, so each run's oracle must replay the
+    // basis that run estimated.
+    "q168_pca_projection" -> ((s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val (means, axes) = graft.ext.Similarity.pcaBasis(
+        emb, "vec_id", "embedding", dim = 64, k = 4)
+      val oracle = () => pcaProjectionOracleSql(means, axes)
+      (graft.ext.Similarity.pcaProjectWith(
+        emb, "vec_id", "embedding", 64, means, axes), oracle)
+    }),
+
+    // --- Calibration audit of the trained scorer: q140's sweep says
+    // whether q148's model RANKS well; this says whether its margin
+    // MEANS anything — per fixed-width margin bin the observed
+    // positive rate and mean score, the table a reliability diagram
+    // plots and the input to any score-thresholding policy. Scores on
+    // the 1e-6 grid, rates/means exact-integer; same memoized model
+    // as q148, captured for the oracle's scoring + binning replay.
+    "q170_calibration" -> ((s, dir) => {
+      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
+      val model = lr148Model(dir, docs)
+      val oracle = () => calibrationOracleSql(model.weights, model.bias)
+      // Round 14: single-pass — score and label ride one projection
+      // (the q173 convention) instead of a second scan joined on
+      // doc_id (1:1 — doc_id unique). The optimizer fence keeps
+      // calibrationBins' null filter from re-inlining the classifier
+      // dot product and the n-gram overlap. Values unchanged.
+      val scored = graft.ext.TextAnalysis.optimizerFence(docs.select(
+        graft.functions.Rounding.reprRound6(
+          graft.functions.Classifier.hashedNgramScore(lower(col("text")),
+            model.weights, model.bias)).as("score"),
+        lr148LabelCol.as("label")))
+      (graft.profile.Profiler.calibrationBins(scored, "score", "label",
+        lo = -1.0, hi = 1.0, nBins = 20), oracle)
+    }),
+
+    // --- Per-language bias audit of the quality filter (the C4
+    // criticism made measurable: a learned filter that silently
+    // passes one language at half another's rate reshapes the corpus
+    // more than any explicit mixture decision). Per lang: n, positives,
+    // keep rate, rank-AUC and accuracy — all integer-exact — plus the
+    // max−min keep-rate disparity. Scoring is ONE map-side projection
+    // (lang, score, label ride together — no corpus joins). Same
+    // memoized model as q148; the oracle replays scoring + the integer
+    // rank-AUC fold per group.
+    "q173_filter_bias" -> ((s, dir) => {
+      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
+      val model = lr148Model(dir, docs)
+      val oracle = () => filterBiasOracleSql(model.weights, model.bias)
+      val scored = docs.select(col("lang"),
+        graft.functions.Classifier.hashedNgramScore(lower(col("text")),
+          model.weights, model.bias).as("score"),
+        lr148LabelCol.as("label"))
+      val metrics = graft.ext.Training.binaryMetrics(
+        scored, "label", "score", Seq("lang"))
+      val rates = scored
+        .filter(col("score").isNotNull && col("label").isNotNull)
+        .groupBy("lang")
+        .agg(sum((col("score") > 0).cast("long")).as("__nk"))
+      val snap6 = (c: org.apache.spark.sql.Column) =>
+        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
+      val wAll = org.apache.spark.sql.expressions.Window.orderBy("lang")
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.unboundedFollowing)
+      // <=> : a null LANG group is data — an equi-join would silently
+      // drop it while the oracle's single GROUP BY keeps it (CLAUDE.md
+      // null-key rule; latent here only because the generator never
+      // emits null lang)
+      (metrics.join(rates.withColumnRenamed("lang", "__lang"),
+          col("lang") <=> col("__lang"))
+        .withColumn("__rate", col("__nk").cast("double") /
+          col("n").cast("double"))
+        .select(col("lang"), col("n"), col("n_pos"),
+          snap6(col("__rate")).as("keep_rate"), col("auc"), col("accuracy"),
+          snap6(max(col("__rate")).over(wAll) -
+            min(col("__rate")).over(wAll)).as("disparity")), oracle)
+    }),
+
+    // --- Tokenizer APPLICATION + multilingual fertility audit: the
+    // trained merge table ENCODES the corpus (the trainer's own fold —
+    // merges in rank order, one non-overlapping left-to-right pass
+    // each), then per language: words, distinct words, chars, BPE
+    // tokens, fertility (tokens/word) and chars/token — the equity
+    // numbers that catch a vocab silently taxing under-represented
+    // languages with 2x sequence length. Training is deterministic, so
+    // the merges are CAPTURED and the oracle replays the encode fold
+    // merge-for-merge (one replace per rank over a noncharacter-
+    // separated symbol string), then the same vocab-keyed aggregation —
+    // a full hash oracle for the encoder, strictly stronger than q82's
+    // invariant summary.
+    "q176_bpe_fertility" -> ((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      val merges = memoTrain(s"bpe12:$dir") {
+        graft.ext.TextAnalysis.bpeTrain(docs, "doc_id", "text",
+            numMerges = 12)
+          .orderBy("rank").collect()
+          .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
+      }
+      val oracle = () => bpeFertilityOracleSql(merges)
+      (graft.ext.TextAnalysis.bpeFertilityByLang(
+        docs, "text", "lang", merges.map { case (_, l, r) => (l, r) }), oracle)
+    })
+  )
+
+  /** One entry per implemented operator from SURVEY.md §2 whose oracle
+    * is static SQL in [[oracleSql]]. */
+  private def staticLines: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- A1-A4, A8, F1-F3: pricing-summary aggregate (TPC-H Q1 shape) ----
     // Exercises: filter pushdown (P2), group-by agg (A4), sum/avg/count
     // (A1-A3), arithmetic expressions, ordering (O1).
@@ -458,25 +788,6 @@ object SparkEntry {
         Tables.documents(s, dir).select(col("doc_id"), url.as("url")), "url")
     }),
 
-    // --- Multimodal: audio-CONTENT dedup — the audio twin of q120.
-    // Every doc becomes a REAL mono 16-bit PCM WAV (ids ≡ 3 mod 7 are
-    // planted RE-ENCODINGS of their predecessor: half sample rate,
-    // half gain — different bytes, different header, same content);
-    // the 65-segment energy-envelope fingerprint is invariant to
-    // resampling and uniform gain, and the shared 4x16-banded Hamming
-    // join pairs the re-encoded duplicates byte digests sail past.
-    // Oracle replays the pairing over the CAPTURED fingerprints.
-    "q130_audio_phash_dedup" -> ((s, dir) => {
-      val media = graft.ext.Multimodal.wavAudioTable(Tables.documents(s, dir))
-      val fp = graft.ext.Multimodal.audioPerceptualHash(media).toDF()
-        .filter(col("afp").isNotNull)
-        .select(col("media_id"), col("afp"))
-        .localCheckpoint(eager = true)
-      audioFp130 = Some((fp.collect()
-        .map(r => (r.getLong(0), r.getLong(1))), 3))
-      graft.ext.Dedup.hammingPairs64(fp, "media_id", "afp", maxHamming = 3)
-    }),
-
     // --- Corpus-scale heavy hitters: global top-k bigrams via a
     // Misra–Gries sketch + exact candidate verification. The exact
     // q58-style groupBy shuffles one row per DISTINCT n-gram per
@@ -592,28 +903,6 @@ object SparkEntry {
         .select(col("qid"), col("id"), round(col("cosine"), 6).as("cosine"), col("rank"))
     }),
 
-    // --- Similarity: IVF ANN (k-means coarse quantizer + cell probing).
-    // Training is seeded-deterministic, so the centroids are CAPTURED
-    // and the whole assign/probe/rank replays in DuckDB — full hash
-    // oracle, no longer rows-only. Recall floor in SimilaritySpec.
-    "q40_ivf_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val ctrs = memoTrain(s"ivf16:$dir") {
-        graft.ext.Similarity.trainIvfCentroids(
-          emb, "vec_id", "embedding", nCells = 16,
-          trainFraction = 0.25, seed = 42L, dim = 64)
-      }
-      // library-default nProbe (8/16): the spec's 0.9 recall floor
-      val nProbe = 8
-      ivfCentroids40 = Some((ctrs, nProbe))
-      graft.ext.Similarity.ivfCosineTopKWith(
-          emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-          k = 10, nProbe, ctrs)
-        .select(col("qid"), col("id"),
-          graft.functions.Rounding.reprRound6(col("cosine")).as("cosine"),
-          col("rank"))
-    }),
-
     // --- Corpus release diff: distinct contents added/removed/retained
     // between two snapshots. Overlapping doc_id ranges model a real
     // release (v1 = ids < 300, v2 = ids >= 100): the shared middle is
@@ -623,103 +912,6 @@ object SparkEntry {
       graft.ext.Dedup.contentDiff(
         docs.filter(col("doc_id") < 300), docs.filter(col("doc_id") >= 100),
         "text")
-    }),
-
-    // --- PQ-ADC approximate top-k: rank from 4-byte codes alone (the
-    // 1e9-vector scan shape). Training is seeded-deterministic, so the
-    // trained books are CAPTURED and replayed as a DuckDB literal table
-    // (the q24 pattern) — full hash oracle, not rows-only.
-    "q112_pq_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      // m = 4 subspaces: codebook training is m driver-sequenced
-      // k-means fits, the whole cost of this query at bench scale —
-      // 4×16-dim books keep the ADC shape at half the fits
-      val books = memoTrain(s"pq4:$dir") {
-        graft.ext.Similarity.trainPqCodebooks(
-          emb, "vec_id", "embedding", dim = 64, m = 4, k = 16,
-          trainFraction = 0.25, seed = 42L)
-      }
-      pqBooks112 = Some(books)
-      graft.ext.Similarity.pqCosineTopKWith(
-          emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-          k = 10, dim = 64, books)
-        .select(col("qid"), col("id"),
-          graft.functions.Rounding.reprRound6(col("cosine_adc"))
-            .as("cosine_adc"), col("rank"))
-    }),
-
-    // --- Product quantization: m codebook codes per vector (m·log2 k
-    // bits vs 32·dim — the compression that puts 1e9 vectors in RAM),
-    // plus the reconstruction audit. Codes dump as a "-"-joined STRING:
-    // an array column would crash the driver's rows-only sort (pandas
-    // can't order ndarrays — seen in CORRECTNESS_r04), and the captured
-    // codebooks give the oracle a full argmin-encode replay anyway.
-    "q110_pq_encode" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val books = memoTrain(s"pq8:$dir") {
-        graft.ext.Similarity.trainPqCodebooks(
-          emb, "vec_id", "embedding", dim = 64, m = 8, k = 16,
-          trainFraction = 0.25, seed = 42L)
-      }
-      pqBooks110 = Some(books)
-      graft.ext.Similarity.pqQuantizeWith(emb, "vec_id", "embedding", 64, books)
-        .select(col("vec_id"), concat_ws("-", col("codes")).as("codes"),
-          col("mse"), col("cos_q"))
-    }),
-
-    // --- PQ-ADC search + exact re-rank: codes-only scan keeps
-    // k*refine candidates, true vectors re-score ONLY those (broadcast
-    // candidate ids — full vectors never shuffle). The two-stage shape
-    // every production ANN runs at 1e9 vectors; recall floor 0.9 in
-    // SimilaritySpec. Same captured-codebook oracle replay as q112.
-    "q115_pq_refined" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      // m=16/refine=16: what the near-random fixture needs for the 0.9
-      // recall floor (SimilaritySpec has the measured sweep)
-      val books = memoTrain(s"pq16:$dir") {
-        graft.ext.Similarity.trainPqCodebooks(
-          emb, "vec_id", "embedding", dim = 64, m = 16, k = 16,
-          trainFraction = 0.25, seed = 42L)
-      }
-      val (k, refine) = (10, 16)
-      pqBooks115 = Some((books, k * refine))
-      graft.ext.Similarity.pqCosineTopKRefinedWith(
-          emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-          k, dim = 64, books, refine)
-        .select(col("qid"), col("id"),
-          graft.functions.Rounding.reprRound6(col("cosine")).as("cosine"),
-          col("rank"))
-    }),
-
-    // --- IVF-PQ ANN (the FAISS IVFADC composition): one scan builds
-    // the (cell, codes, norm) index; queries probe nProbe cells, score
-    // members from CODES alone, exact-rerank the ADC top-(k*refine).
-    // Codebooks are RESIDUAL-trained (v - centroid(cell)) at m=8 —
-    // HALF the m=16 raw-book code budget this entry used pre-residual,
-    // same 0.94 recall@10 at nProbe=10 (measured sweep in
-    // SimilaritySpec). Both trainers captured -> full DuckDB replay.
-    "q116_ivf_pq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val ctrs = memoTrain(s"ivf16:$dir") {
-        graft.ext.Similarity.trainIvfCentroids(
-          emb, "vec_id", "embedding", nCells = 16,
-          trainFraction = 0.25, seed = 42L, dim = 64)
-      }
-      val books = memoTrain(s"pqres8:$dir") {
-        graft.ext.Similarity.trainPqCodebooks(
-          graft.ext.Similarity.ivfResiduals(
-            emb, "vec_id", "embedding", 64, ctrs),
-          "id", "rv", dim = 64, m = 8, k = 16,
-          trainFraction = 0.25, seed = 42L)
-      }
-      val (k, nProbe, refine) = (10, 10, 16)
-      ivfPq116 = Some((ctrs, books, nProbe, k * refine))
-      graft.ext.Similarity.ivfPqTopKWith(
-          emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-          k, dim = 64, nProbe, ctrs, books, refine)
-        .select(col("qid"), col("id"),
-          graft.functions.Rounding.reprRound6(col("cosine")).as("cosine"),
-          col("rank"))
     }),
 
     // --- Partitioned lake layout + DYNAMIC partition pruning: the fact
@@ -1210,31 +1402,6 @@ object SparkEntry {
       graft.ext.TextAnalysis.bpeInvariantSummary(
         Tables.documents(s, dir), "doc_id", "text", numMerges = 4)),
 
-    // --- Tokenizer APPLICATION + multilingual fertility audit: the
-    // trained merge table ENCODES the corpus (the trainer's own fold —
-    // merges in rank order, one non-overlapping left-to-right pass
-    // each), then per language: words, distinct words, chars, BPE
-    // tokens, fertility (tokens/word) and chars/token — the equity
-    // numbers that catch a vocab silently taxing under-represented
-    // languages with 2x sequence length. Training is deterministic, so
-    // the merges are CAPTURED and the oracle replays the encode fold
-    // merge-for-merge (one replace per rank over a noncharacter-
-    // separated symbol string), then the same vocab-keyed aggregation —
-    // a full hash oracle for the encoder, strictly stronger than q82's
-    // invariant summary.
-    "q176_bpe_fertility" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val merges = memoTrain(s"bpe12:$dir") {
-        graft.ext.TextAnalysis.bpeTrain(docs, "doc_id", "text",
-            numMerges = 12)
-          .orderBy("rank").collect()
-          .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
-      }
-      bpeMerges176 = Some(merges)
-      graft.ext.TextAnalysis.bpeFertilityByLang(
-        docs, "text", "lang", merges.map { case (_, l, r) => (l, r) })
-    }),
-
     // --- Boilerplate REMOVAL (q68 surfaces the digests; this is the
     // clean-text output a pipeline actually ships): lines anti-joined
     // against the broadcast boilerplate set, reassembled in order; docs
@@ -1252,29 +1419,6 @@ object SparkEntry {
       graft.ext.Multimodal.imageHeaderDims(
         graft.ext.Multimodal.mediaTableHeadered(Tables.documents(s, dir)))
         .toDF()),
-
-    // --- Multimodal: image-CONTENT dedup — the perceptual twin of q18.
-    // Every doc becomes a REAL 16x16 BMP (ids ≡ 3 mod 7 are planted
-    // +8-brightness RE-ENCODINGS of their predecessor); the JDK codec
-    // decodes actual pixels, deterministic integer dHash fingerprints
-    // them, and the shared 4x16-banded Hamming join pairs near-dups —
-    // re-encoded/brightness-shifted duplicate images that byte-level
-    // digests (q15) sail past. The oracle replays the pairing in SQL
-    // over the CAPTURED fingerprints (the decode itself is not
-    // SQL-expressible; the capture is the narrow 16 B/image frame the
-    // plan shuffles anyway, collected ONLY to render the oracle).
-    "q120_image_phash_dedup" -> ((s, dir) => {
-      val media = graft.ext.Multimodal.bmpImageTable(Tables.documents(s, dir))
-      // fingerprints feed the capture AND both join sides: eager
-      // checkpoint once (the SCALE.md multi-consumer rule)
-      val fp = graft.ext.Multimodal.imagePerceptualHash(media).toDF()
-        .filter(col("dhash").isNotNull)
-        .select(col("media_id"), col("dhash"))
-        .localCheckpoint(eager = true)
-      imageFp120 = Some((fp.collect()
-        .map(r => (r.getLong(0), r.getLong(1))), 2))
-      graft.ext.Dedup.hammingPairs64(fp, "media_id", "dhash", maxHamming = 2)
-    }),
 
     // --- Benchmark decontamination: distinct 5-gram overlap of each
     // corpus doc (doc_id >= 100) against the "benchmark" slice
@@ -1648,31 +1792,6 @@ object SparkEntry {
         // and verify nothing
         .agg(count(lit(1)).as("cluster_size"),
           max(col("vec_id")).as("survivor"))
-    }),
-
-    // --- SemDeDup (Abbas et al. 2023): k-means cells (q40's captured
-    // 16-cell coarse quantizer, shared via the trainer memo) block the
-    // pair search; within-cell exact cosine >= tau merges semantic
-    // duplicates; each group keeps the member FARTHEST from its
-    // centroid. Contrast with q104: learned semantic blocking vs
-    // random-hyperplane blocking — cross-cell near-dups stay apart by
-    // design. Captured centroids -> full DuckDB replay (assignment,
-    // pairing, recursive closure, keep policy).
-    "q121_semdedup" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      // constant-occupancy cell count (the adaptivePlanes audit rule):
-      // fixed 16 cells would make within-cell pairing quadratic in the
-      // corpus; at the oracle SFs the formula still yields 16, sharing
-      // q40's memoized quantizer and keeping outputs byte-identical
-      val k = graft.ext.Similarity.adaptiveCells(emb.count())
-      val ctrs = memoTrain(s"ivf$k:$dir") {
-        graft.ext.Similarity.trainIvfCentroids(
-          emb, "vec_id", "embedding", nCells = k,
-          trainFraction = 0.25, seed = 42L, dim = 64)
-      }
-      val tau = 0.45
-      semCtrs121 = Some((ctrs, tau))
-      graft.ext.Dedup.semDedupWith(emb, "vec_id", "embedding", ctrs, tau)
     }),
 
     // --- CAPSTONE curation pipeline: quality gates (q70's thresholds)
@@ -2056,38 +2175,6 @@ object SparkEntry {
         "size_bytes", targetBytes = 2500L)
     }),
 
-    // --- In-engine classifier TRAINING (closes the q128 loop: the
-    // pipeline now PRODUCES its quality filter, not just applies one):
-    // logistic regression over the scorer's exact hashed unigram+bigram
-    // features, trained on a FIXED 20k-doc slice (each epoch is a full
-    // pass over the training set — sample-sized by the trainLogReg row
-    // gate, never corpus-sized), then deployed over the FULL corpus as
-    // the same zero-shuffle codegen expression q128 uses. Truth = a
-    // PLANTED 8-bigram disjunction (~36% positive at every SF) — a
-    // signal the feature space genuinely carries, so the trainer must
-    // isolate those bigram buckets against hash-collision noise.
-    // (Neither of the corpus's metadata labels is learnable from BoW:
-    // the q140 rule gate is length-shaped and the mean normalization
-    // removes length; `lang` is uncorrelated with the shared synthetic
-    // vocabulary — both measured at the all-one-class prior.) Oracle
-    // replays SCORING with the captured snapped weights (the q40/q110
-    // captured-params pattern); the label is a trivial replay.
-    "q148_trained_classifier" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
-      val truth = lr148TruthDF(docs)
-      val model = lr148Model(dir, docs, truth)
-      trainedLr148 = Some((model.weights, model.bias))
-      // Round 14: label, score and pred ride ONE map projection (the
-      // q173 convention) instead of re-scanning for the truth frame
-      // and joining on doc_id (1:1 — doc_id unique). The raw score
-      // CSEs into a single evaluation; every value is unchanged.
-      val raw = graft.functions.Classifier.hashedNgramScore(
-        lower(col("text")), model.weights, model.bias)
-      docs.select(col("doc_id"), lr148LabelCol.as("label"),
-        graft.functions.Rounding.reprRound6(raw).as("score"),
-        (raw > 0).cast("int").as("pred"))
-    }),
-
     // --- MP4/ISO-BMFF box walk: documents become spec-correct MP4s
     // (every 11th-mod-3 in the 64-bit/version-1 layout real muxers
     // emit past 32-bit times, every 11th-mod-7 truncated mid-moov),
@@ -2189,51 +2276,6 @@ object SparkEntry {
         .select(col("a.media_id").as("id_a"), col("b.media_id").as("id_b"),
           col("a.n_samples").as("n_samples"),
           col("a.total_bytes").as("total_bytes"))
-    }),
-
-    // --- Seeded k-fold cross-validation of the in-engine trainer: the
-    // eval loop that picks a quality filter WITHOUT measuring it on
-    // its own training data (q148 trains once; this answers "do the
-    // learned weights generalize or memorize"). Folds are a salted
-    // doc-id hash — honest here because the metric slice carries the
-    // q148 planted labels; on an undeduplicated corpus pass q133's
-    // component labels as the fold source instead (kFoldLogReg's
-    // foldCol), or a held-out twin inflates every metric. Each fold
-    // trains on the complement under trainLogReg's sample-size gate;
-    // scoring is ONE scan whose projection switches weight vectors by
-    // fold (weights ride codegen as reference objects), and AUC /
-    // accuracy stay integer arithmetic until a single division
-    // (Training.binaryMetrics) — engine-exact, no float snap at all.
-    "q153_kfold_cv" -> ((s, dir) => {
-      val planted = Seq("spark join", "data table", "big data",
-        "fast scan", "hash join", "stream batch", "key value",
-        "slow query")
-      val labeled = Tables.documents(s, dir)
-        .filter(col("text").isNotNull && col("doc_id") < 20000)
-        .withColumn("label",
-          arrays_overlap(
-            graft.functions.Strings.wordNgrams(lower(col("text")), 2,
-              wholeTextFallback = false),
-            array(planted.map(lit): _*)).cast("int"))
-      val models = memoTrain(s"cv153:$dir") {
-        graft.ext.Training.kFoldLogReg(labeled, "doc_id", "text", "label",
-          k = 3, buckets = 1024, maxIter = 100)
-      }
-      trainedCv153 = Some(models.map { case (i, m) =>
-        (i, m.weights, m.bias) })
-      val withFold = labeled.withColumn("fold",
-        graft.ext.Training.foldColumn(col("doc_id"), 3))
-      val score = models.foldLeft(lit(null).cast("double")) {
-        case (acc, (i, m)) =>
-          when(col("fold") === i,
-            graft.functions.Classifier.hashedNgramScore(
-              lower(col("text")), m.weights, m.bias)).otherwise(acc)
-      }
-      graft.ext.Training.binaryMetrics(
-          withFold.withColumn("score", score),
-          "label", "score", groupCols = Seq("fold"))
-        .select(col("fold"), col("n").as("n_test"), col("n_pos"),
-          col("auc"), col("accuracy"))
     }),
 
     // --- Semantic decontamination: the embedding rung of the q86/q122
@@ -2488,22 +2530,6 @@ object SparkEntry {
         Tables.documents(s, dir).filter(col("doc_id").isNotNull),
         "lang", "n_chars", totalBudget = 30000L, maxEpochs = 0.3)),
 
-    // --- PCA projection: the data-adapted reduction next to q144's
-    // oblivious JL — basis from one distributed covariance pass
-    // (dim×dim eigenproblem on the driver, the tall-skinny shape),
-    // sign-canonicalized; the projection is the same codegen'd
-    // ascending-index matVec fold q144 uses, with the centering folded
-    // into one literal per axis. Basis captured → oracle replays the
-    // projection with the captured literals (the q40/q110 pattern).
-    "q168_pca_projection" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val (means, axes) = graft.ext.Similarity.pcaBasis(
-        emb, "vec_id", "embedding", dim = 64, k = 4)
-      pcaBasis168 = Some((means, axes))
-      graft.ext.Similarity.pcaProjectWith(
-        emb, "vec_id", "embedding", 64, means, axes)
-    }),
-
     // --- Cross-corpus containment gate: the admission question of an
     // incremental corpus — is this incoming doc ≥80% CONTAINED in
     // something the catalog already holds? The asymmetric rung next
@@ -2522,32 +2548,6 @@ object SparkEntry {
           // floor-snap (Rounding.scala contract), never round(x,6)
           graft.functions.Rounding.reprRound6(col("containment"))
             .as("containment"), col("contained"))
-    }),
-
-    // --- Calibration audit of the trained scorer: q140's sweep says
-    // whether q148's model RANKS well; this says whether its margin
-    // MEANS anything — per fixed-width margin bin the observed
-    // positive rate and mean score, the table a reliability diagram
-    // plots and the input to any score-thresholding policy. Scores on
-    // the 1e-6 grid, rates/means exact-integer; same memoized model
-    // as q148, captured for the scoring replay.
-    "q170_calibration" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
-      val truth = lr148TruthDF(docs)
-      val model = lr148Model(dir, docs, truth)
-      calibLr170 = Some((model.weights, model.bias))
-      // Round 14: single-pass — score and label ride one projection
-      // (the q173 convention) instead of a second scan joined on
-      // doc_id (1:1 — doc_id unique). The optimizer fence keeps
-      // calibrationBins' null filter from re-inlining the classifier
-      // dot product and the n-gram overlap. Values unchanged.
-      val scored = graft.ext.TextAnalysis.optimizerFence(docs.select(
-        graft.functions.Rounding.reprRound6(
-          graft.functions.Classifier.hashedNgramScore(lower(col("text")),
-            model.weights, model.bias)).as("score"),
-        lr148LabelCol.as("label")))
-      graft.profile.Profiler.calibrationBins(scored, "score", "label",
-        lo = -1.0, hi = 1.0, nBins = 20)
     }),
 
     // --- Domain link-graph extraction: pages become HTML with
@@ -2597,50 +2597,6 @@ object SparkEntry {
       graft.ext.TextAnalysis.domainQualityReport(flags, "source",
         Seq("ok_length", "ok_token_len", "ok_punct"), "keep",
         minKeepShare = 0.5)
-    }),
-
-    // --- Per-language bias audit of the quality filter (the C4
-    // criticism made measurable: a learned filter that silently
-    // passes one language at half another's rate reshapes the corpus
-    // more than any explicit mixture decision). Per lang: n, positives,
-    // keep rate, rank-AUC and accuracy — all integer-exact — plus the
-    // max−min keep-rate disparity. Scoring is ONE map-side projection
-    // (lang, score, label ride together — no corpus joins).
-    "q173_filter_bias" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).filter(col("text").isNotNull)
-      val truth = lr148TruthDF(docs)
-      val model = lr148Model(dir, docs, truth)
-      biasLr173 = Some((model.weights, model.bias))
-      val scored = docs.select(col("lang"),
-        graft.functions.Classifier.hashedNgramScore(lower(col("text")),
-          model.weights, model.bias).as("score"),
-        arrays_overlap(
-          graft.functions.Strings.wordNgrams(lower(col("text")), 2,
-            wholeTextFallback = false),
-          array(Planted148.map(lit): _*)).cast("int").as("label"))
-      val metrics = graft.ext.Training.binaryMetrics(
-        scored, "label", "score", Seq("lang"))
-      val rates = scored
-        .filter(col("score").isNotNull && col("label").isNotNull)
-        .groupBy("lang")
-        .agg(sum((col("score") > 0).cast("long")).as("__nk"))
-      val snap6 = (c: org.apache.spark.sql.Column) =>
-        floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-      val wAll = org.apache.spark.sql.expressions.Window.orderBy("lang")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)
-      // <=> : a null LANG group is data — an equi-join would silently
-      // drop it while the oracle's single GROUP BY keeps it (CLAUDE.md
-      // null-key rule; latent here only because the generator never
-      // emits null lang)
-      metrics.join(rates.withColumnRenamed("lang", "__lang"),
-          col("lang") <=> col("__lang"))
-        .withColumn("__rate", col("__nk").cast("double") /
-          col("n").cast("double"))
-        .select(col("lang"), col("n"), col("n_pos"),
-          snap6(col("__rate")).as("keep_rate"), col("auc"), col("accuracy"),
-          snap6(max(col("__rate")).over(wAll) -
-            min(col("__rate")).over(wAll)).as("disparity"))
     }),
 
     // --- Duplicated-span REMOVAL (the deletion half of ExactSubstr
@@ -2771,16 +2727,11 @@ object SparkEntry {
       |FROM perdoc, tot
       |WHERE tf0 > 0 OR tf1 > 0 OR tf2 > 0)""".stripMargin
 
-  /** q128 replay: regenerate the md5-derived weight table as a DOUBLE[]
-    * literal, rebuild the ordered feature list (unigrams then adjacent
-    * bigrams — the engine's exact accumulation order), fold bucket
-    * weights with list_aggregate (in-order sum), snap with the shared
-    * floor form. `keep` is decided on the RAW score, as in the engine.
-    */
-  private def classifierOracleSql(buckets: Int = 256,
-                                  bias: Double = -0.05): String = {
-    val w = graft.functions.HashedNgramScorer.md5Weights(buckets)
-      .mkString(", ")
+  /** The hashed n-gram scorer's feature CTEs over `documents`: the
+    * weight literal `wl`, tokens `t` and the ordered feature list `f`
+    * (unigrams then adjacent bigrams — the engine's exact accumulation
+    * order). Opens the WITH clause; ends in a comma. */
+  private def scorerFeatureCtes(w: String): String =
     s"""WITH wl AS (SELECT CAST([$w] AS DOUBLE[]) AS w),
        |t AS (
        |  SELECT doc_id,
@@ -2791,16 +2742,42 @@ object SparkEntry {
        |  SELECT doc_id, ts,
        |    list_concat(ts,
        |      [ts[i] || ' ' || ts[i+1] FOR i IN range(1, len(ts))]) AS fs
-       |  FROM t),
+       |  FROM t),""".stripMargin
+
+  /** The scorer's RAW score over `ts`/`fs` with the weights in `wl`:
+    * bucket weights folded with list_aggregate (in-order sum) over the
+    * feature count, plus bias; bias alone for an empty doc. */
+  private def scorerRawSql(bias: Double, buckets: Int): String =
+    s"""CASE WHEN len(ts) = 0 THEN $bias
+       |         ELSE $bias + list_aggregate(
+       |             [wl.w[('0x' || substr(md5(x), 1, 8))::BIGINT % $buckets + 1]
+       |              FOR x IN fs], 'sum') / (2*len(ts) - 1)
+       |    END""".stripMargin
+
+  /** The planted-bigram truth label over `ts` ([[Planted148]]), cast to
+    * `sqlType`. */
+  private def plantedLabelSql(sqlType: String): String =
+    s"""CAST(CASE WHEN list_has_any(
+       |      [ts[i] || ' ' || ts[i+1] FOR i IN range(1, len(ts))],
+       |      [${Planted148.map(t => s"'$t'").mkString(", ")}])
+       |      THEN 1 ELSE 0 END AS $sqlType)""".stripMargin
+
+  /** q128 replay: regenerate the md5-derived weight table as a DOUBLE[]
+    * literal, rebuild the ordered feature list (unigrams then adjacent
+    * bigrams — the engine's exact accumulation order), fold bucket
+    * weights with list_aggregate (in-order sum), snap with the shared
+    * floor form. `keep` is decided on the RAW score, as in the engine.
+    */
+  private def classifierOracleSql(buckets: Int = 256,
+                                  bias: Double = -0.05): String = {
+    val w = graft.functions.HashedNgramScorer.md5Weights(buckets)
+      .mkString(", ")
+    s"""${scorerFeatureCtes(w)}
        |s AS (
        |  SELECT doc_id,
        |    CAST(CASE WHEN len(ts) > 0 THEN 2*len(ts) - 1 ELSE 0 END
        |      AS BIGINT) AS n_features,
-       |    CASE WHEN len(ts) = 0 THEN $bias
-       |         ELSE $bias + list_aggregate(
-       |             [wl.w[('0x' || substr(md5(x), 1, 8))::BIGINT % $buckets + 1]
-       |              FOR x IN fs], 'sum') / (2*len(ts) - 1)
-       |    END AS raw
+       |    ${scorerRawSql(bias, buckets)} AS raw
        |  FROM f, wl)
        |SELECT doc_id, n_features,
        |  floor(raw * 1e6 + 0.5) / 1e6 AS score,
@@ -2818,31 +2795,14 @@ object SparkEntry {
                                          bias: Double): String = {
     val w = weights.mkString(", ")
     val buckets = weights.length
-    s"""WITH wl AS (SELECT CAST([$w] AS DOUBLE[]) AS w),
-       |t AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[ \t\n\f\r]+'),
-       |      x -> x <> '') AS ts
-       |  FROM documents WHERE text IS NOT NULL),
-       |f AS (
-       |  SELECT doc_id, ts,
-       |    list_concat(ts,
-       |      [ts[i] || ' ' || ts[i+1] FOR i IN range(1, len(ts))]) AS fs
-       |  FROM t),
+    s"""${scorerFeatureCtes(w)}
        |sc AS (
        |  SELECT doc_id,
-       |    CASE WHEN len(ts) = 0 THEN $bias
-       |         ELSE $bias + list_aggregate(
-       |             [wl.w[('0x' || substr(md5(x), 1, 8))::BIGINT % $buckets + 1]
-       |              FOR x IN fs], 'sum') / (2*len(ts) - 1)
-       |    END AS raw
+       |    ${scorerRawSql(bias, buckets)} AS raw
        |  FROM f, wl),
        |lab AS (
        |  SELECT doc_id,
-       |    CAST(CASE WHEN list_has_any(
-       |      [ts[i] || ' ' || ts[i+1] FOR i IN range(1, len(ts))],
-       |      [${Planted148.map(t => s"'$t'").mkString(", ")}])
-       |      THEN 1 ELSE 0 END AS INT) AS label
+       |    ${plantedLabelSql("INT")} AS label
        |  FROM t)
        |SELECT doc_id, label,
        |  floor(raw * 1e6 + 0.5) / 1e6 AS score,
@@ -2858,31 +2818,14 @@ object SparkEntry {
                                    bias: Double): String = {
     val w = weights.mkString(", ")
     val buckets = weights.length
-    s"""WITH wl AS (SELECT CAST([$w] AS DOUBLE[]) AS w),
-       |t AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[ \t\n\f\r]+'),
-       |      x -> x <> '') AS ts
-       |  FROM documents WHERE text IS NOT NULL),
-       |f AS (
-       |  SELECT doc_id, ts,
-       |    list_concat(ts,
-       |      [ts[i] || ' ' || ts[i+1] FOR i IN range(1, len(ts))]) AS fs
-       |  FROM t),
+    s"""${scorerFeatureCtes(w)}
        |sc AS (
        |  SELECT doc_id,
-       |    CASE WHEN len(ts) = 0 THEN $bias
-       |         ELSE $bias + list_aggregate(
-       |             [wl.w[('0x' || substr(md5(x), 1, 8))::BIGINT % $buckets + 1]
-       |              FOR x IN fs], 'sum') / (2*len(ts) - 1)
-       |    END AS raw
+       |    ${scorerRawSql(bias, buckets)} AS raw
        |  FROM f, wl),
        |lab AS (
        |  SELECT doc_id,
-       |    CAST(CASE WHEN list_has_any(
-       |      [ts[i] || ' ' || ts[i+1] FOR i IN range(1, len(ts))],
-       |      [${Planted148.map(t => s"'$t'").mkString(", ")}])
-       |      THEN 1 ELSE 0 END AS BIGINT) AS label
+       |    ${plantedLabelSql("BIGINT")} AS label
        |  FROM t),
        |sn AS (
        |  SELECT sc.doc_id, floor(raw * 1e6 + 0.5) / 1e6 AS s6, lab.label
@@ -2923,15 +2866,8 @@ object SparkEntry {
        |  FROM t),
        |sc AS (
        |  SELECT lang,
-       |    CASE WHEN len(ts) = 0 THEN $bias
-       |         ELSE $bias + list_aggregate(
-       |             [wl.w[('0x' || substr(md5(x), 1, 8))::BIGINT % $buckets + 1]
-       |              FOR x IN fs], 'sum') / (2*len(ts) - 1)
-       |    END AS raw,
-       |    CAST(CASE WHEN list_has_any(
-       |      [ts[i] || ' ' || ts[i+1] FOR i IN range(1, len(ts))],
-       |      [${Planted148.map(t => s"'$t'").mkString(", ")}])
-       |      THEN 1 ELSE 0 END AS BIGINT) AS label
+       |    ${scorerRawSql(bias, buckets)} AS raw,
+       |    ${plantedLabelSql("BIGINT")} AS label
        |  FROM f, wl),
        |rws AS (
        |  SELECT lang, CAST(floor(raw * 1e6 + 0.5) AS BIGINT) AS s, label,
@@ -3007,10 +2943,7 @@ object SparkEntry {
        |  FROM t),
        |sc AS (
        |  SELECT doc_id, fold,
-       |    CAST(CASE WHEN list_has_any(
-       |      [ts[i] || ' ' || ts[i+1] FOR i IN range(1, len(ts))],
-       |      [${Planted148.map(t => s"'$t'").mkString(", ")}])
-       |      THEN 1 ELSE 0 END AS BIGINT) AS label,
+       |    ${plantedLabelSql("BIGINT")} AS label,
        |    (CASE$scoreCase END) AS raw
        |  FROM f, $wFrom),
        |g AS (
@@ -3043,24 +2976,10 @@ object SparkEntry {
                                        bias: Double = -0.05): String = {
     val w = graft.functions.HashedNgramScorer.md5Weights(buckets)
       .mkString(", ")
-    s"""WITH wl AS (SELECT CAST([$w] AS DOUBLE[]) AS w),
-       |t AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[ \t\n\f\r]+'),
-       |      x -> x <> '') AS ts
-       |  FROM documents WHERE text IS NOT NULL),
-       |f AS (
-       |  SELECT doc_id, ts,
-       |    list_concat(ts,
-       |      [ts[i] || ' ' || ts[i+1] FOR i IN range(1, len(ts))]) AS fs
-       |  FROM t),
+    s"""${scorerFeatureCtes(w)}
        |sc AS (
        |  SELECT doc_id,
-       |    floor((CASE WHEN len(ts) = 0 THEN $bias
-       |         ELSE $bias + list_aggregate(
-       |             [wl.w[('0x' || substr(md5(x), 1, 8))::BIGINT % $buckets + 1]
-       |              FOR x IN fs], 'sum') / (2*len(ts) - 1)
-       |    END) * 1e6 + 0.5) / 1e6 AS s
+       |    floor((${scorerRawSql(bias, buckets)}) * 1e6 + 0.5) / 1e6 AS s
        |  FROM f, wl),
        |qt AS (
        |  SELECT doc_id,
@@ -3674,36 +3593,6 @@ object SparkEntry {
        |FROM agg""".stripMargin
   }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    * Column names/aliases MUST match the Spark output exactly.
-    */
-  def oracleSql: Map[String, String] = staticOracleSql ++
-    pqBooks110.map(b => "q110_pq_encode" -> pqEncodeOracleSql(b)) ++
-    pqBooks112.map(b => "q112_pq_topk" -> pqTopkOracleSql(b)) ++
-    pqBooks115.map { case (b, kr) =>
-      "q115_pq_refined" -> pqRefinedOracleSql(b, kr) } ++
-    ivfCentroids40.map { case (c, np) =>
-      "q40_ivf_topk" -> ivfTopkOracleSql(c, np) } ++
-    ivfPq116.map { case (c, b, np, kr) =>
-      "q116_ivf_pq" -> ivfPqOracleSql(c, b, np, kr) } ++
-    imageFp120.map { case (fp, maxH) =>
-      "q120_image_phash_dedup" -> fingerprintHammingOracleSql(fp, maxH) } ++
-    audioFp130.map { case (fp, maxH) =>
-      "q130_audio_phash_dedup" -> fingerprintHammingOracleSql(fp, maxH) } ++
-    semCtrs121.map { case (c, tau) =>
-      "q121_semdedup" -> semDedupOracleSql(c, tau) } ++
-    trainedLr148.map { case (w, b) =>
-      "q148_trained_classifier" -> trainedClassifierOracleSql(w, b) } ++
-    trainedCv153.map(ms => "q153_kfold_cv" -> kfoldCvOracleSql(ms)) ++
-    pcaBasis168.map { case (m, a) =>
-      "q168_pca_projection" -> pcaProjectionOracleSql(m, a) } ++
-    calibLr170.map { case (w, b) =>
-      "q170_calibration" -> calibrationOracleSql(w, b) } ++
-    biasLr173.map { case (w, b) =>
-      "q173_filter_bias" -> filterBiasOracleSql(w, b) } ++
-    bpeMerges176.map(m => "q176_bpe_fertility" -> bpeFertilityOracleSql(m))
-
   /** q121 replay: captured centroids → argmin-euclid cell assignment
     * (the q40 CTE), per-member centroid cosine (the engine's exact
     * index-order fold + the shared floor-snap), within-cell pairs at
@@ -3783,9 +3672,10 @@ object SparkEntry {
     * 64-bit fingerprints (image dHash / audio energy hash — the decode
     * is not SQL-expressible; the capture is the narrow 16 B/row frame
     * the plan shuffles anyway, collected only to render the oracle). */
-  private def fingerprintHammingOracleSql(fp: Array[(Long, Long)],
+  private def fingerprintHammingOracleSql(fp: DataFrame,
                                           maxHamming: Int): String = {
-    val rows = fp.map { case (id, d) => s"($id, $d)" }.mkString(",\n    ")
+    val rows = fp.collect().map(r => s"(${r.getLong(0)}, ${r.getLong(1)})")
+      .mkString(",\n    ")
     s"""WITH fpv(media_id, dhash) AS (VALUES
        |    $rows),
        |fp AS (SELECT CAST(media_id AS BIGINT) AS media_id,
@@ -4102,7 +3992,11 @@ object SparkEntry {
        |FROM rk WHERE rank <= 10""".stripMargin
   }
 
-  private def staticOracleSql: Map[String, String] = Map(
+  /** For each of the [[staticLines]], equivalent ANSI SQL runnable by
+    * DuckDB on the same parquet tables; the [[capturedLines]] return
+    * their own. Column names/aliases MUST match the Spark output exactly.
+    */
+  def oracleSql: Map[String, String] = Map(
     "q1_agg" ->
       """SELECT l_returnflag, l_linestatus,
         |  round(sum(l_quantity), 2) AS sum_qty,

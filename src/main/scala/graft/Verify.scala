@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,21 +12,26 @@ object Verify {
     def selected(name: String): Boolean =
       only.forall(_.exists(name.contains))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // GraftSession.tune: the engine's standard confs (UTC, nanos, zstd
+    // GraftSession.local: the engine's standard confs (UTC, nanos, zstd
     // output), so the correctness dumps are written the way the library
     // writes — not with a hand-copied subset of the settings
-    val spark = GraftSession.tune(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // the oracles of the captured lines that ran, rendered from the
+    // values each run computed
+    val captured = scala.collection.mutable.Map.empty[String, String]
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        try {
+          val df = SparkEntry.capturedLines.get(name).fold(fn(spark, sfDir)) {
+            line =>
+              val (df, oracle) = line(spark, sfDir)
+              captured(name) = oracle()
+              df
+          }
+          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
@@ -44,7 +48,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = (SparkEntry.oracleSql ++ captured)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

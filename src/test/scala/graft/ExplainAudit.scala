@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit (test scope): prints the formatted physical plan for
   * selected registry queries and flags the markers that matter at scale
   * (filter pushdown, read-schema pruning, broadcast vs shuffle joins,
@@ -13,14 +11,11 @@ object ExplainAudit {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_agg", "q2_filter", "q26_join_revenue", "q27_join_topn",
         "q11_numeric_stats", "q20_ann_topk")
-    val s = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // audit the STATIC plan: AQE's wrapper hides codegen spans (and
-      // re-plans joins) before execution, so turn it off here — prod
-      // sessions keep it on
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = GraftSession.local(8)
+    // audit the STATIC plan: AQE's wrapper hides codegen spans (and
+    // re-plans joins) before execution, so turn it off here — prod
+    // sessions keep it on
+    s.conf.set("spark.sql.adaptive.enabled", "false")
     s.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val df = SparkEntry.queries(n)(s, dir)

@@ -1,7 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for registered queries to files —
   * the plans/r14 evidence artifacts (judge checks plan claims against
   * these; it cannot run Spark). Throwaway test-scope tooling.
@@ -15,19 +13,14 @@ object PlanDumpMain {
     val out = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    // GraftSession.tune so the dumped plans come from the SAME session
-    // shape Bench/Verify run (AQE initialPartitionNum etc.) — an
-    // untuned session materializes checkpoints at different partition
-    // counts and scale-adaptive gates plan differently.
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-        .appName("graft-plandump")
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.graft.scan.minPartitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // GraftSession.local plus Bench's scan floor, so the dumped plans
+    // come from the SAME session shape Bench/Verify run (AQE
+    // initialPartitionNum etc.) — an untuned session materializes
+    // checkpoints at different partition counts and scale-adaptive
+    // gates plan differently.
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = graft.GraftSession.local(cpus.toInt, "graft-plandump")
+    spark.conf.set("spark.graft.scan.minPartitions", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
