@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
   /** Cumulative task-level data-volume counters. Wall time says a query
@@ -54,30 +54,40 @@ object Bench {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      // Session hygiene OUTSIDE the timed window: eager localCheckpoint
-      // blocks from finished queries linger until a driver GC notices
-      // them, occupying storage memory and dragging successors away
-      // from their isolated cost (q39 measured 54.9 s mid-board vs
-      // 35.3 s solo on the same code, machine, and heap). Clearing
-      // makes each line approximate a fresh-session run — the cluster
-      // reality, where every query is its own app. Safe by contract:
-      // localCheckpoint truncates lineage, so any cross-query reuse of
-      // a cleared block would already be a bug (the memoized trainer
-      // state is driver-side arrays, never frames).
-      // blocking=true: block removal runs OUTSIDE the timed window by
-      // construction, so paying for it here is free — blocking=false
-      // let removal/bookkeeping overlap the next measured query.
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      val v0 = vol.settled
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val v1 = vol.settled // outside the timed window
-      (name, dt, ok, (v1._1 - v0._1, v1._2 - v0._2, v1._3 - v0._3))
-    }
+        val (dt, ok, dv) = sample(spark, sfDir, vol, fn)
+        (name, dt, ok, dv)
+      }
+
+  /** One timed sample of a line: build + `count()` inside the window,
+    * returning (seconds, ok, volume delta as (read, write, spill)).
+    */
+  private def sample(spark: SparkSession, sfDir: String, vol: VolumeListener,
+                     fn: (SparkSession, String) => DataFrame)
+      : (Double, Boolean, (Long, Long, Long)) = {
+    // Session hygiene OUTSIDE the timed window: eager localCheckpoint
+    // blocks from finished queries linger until a driver GC notices
+    // them, occupying storage memory and dragging successors away
+    // from their isolated cost (q39 measured 54.9 s mid-board vs
+    // 35.3 s solo on the same code, machine, and heap). Clearing
+    // makes each line approximate a fresh-session run — the cluster
+    // reality, where every query is its own app. Safe by contract:
+    // localCheckpoint truncates lineage, so any cross-query reuse of
+    // a cleared block would already be a bug (the memoized trainer
+    // state is driver-side arrays, never frames).
+    // blocking=true: block removal runs OUTSIDE the timed window by
+    // construction, so paying for it here is free — blocking=false
+    // let removal/bookkeeping overlap the next measured query.
+    spark.sparkContext.getPersistentRDDs.valuesIterator
+      .foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
+    val v0 = vol.settled
+    val t0 = System.nanoTime()
+    val ok = try { fn(spark, sfDir).count(); true }
+             catch { case _: Throwable => false }
+    val dt = (System.nanoTime() - t0) / 1e9
+    val v1 = vol.settled // outside the timed window
+    (dt, ok, (v1._1 - v0._1, v1._2 - v0._2, v1._3 - v0._3))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -170,17 +180,9 @@ object Bench {
     val rescued: Map[String, Double] = suspects.flatMap { n =>
       val fn = SparkEntry.queries(n)
       val okTimes = (1 to 2).flatMap { _ =>
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = true))
-        spark.catalog.clearCache()
-        val v0 = vol.settled
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val v1 = vol.settled
-        rescueShuffle += v1._2 - v0._2
-        rescueSpill += v1._3 - v0._3
+        val (dt, ok, (_, shuffle, spill)) = sample(spark, sfDir, vol, fn)
+        rescueShuffle += shuffle
+        rescueSpill += spill
         if (ok) Some(dt) else None
       }
       // both rescue samples failed → keep the pass-measured time

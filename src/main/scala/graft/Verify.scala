@@ -1,5 +1,8 @@
 package graft
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Path, Paths}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -36,21 +39,19 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = (SparkEntry.oracleSql ++ captured)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleJson(SparkEntry.oracleSql ++ captured,
+      Paths.get(s"$outDir/oracle_sql.json"))
     spark.stop()
+  }
+
+  /** `name -> oracle SQL` as the JSON object the oracle compare reads
+    * with `json.load`. Jackson escapes quotes, backslashes and every
+    * control char: one bad escape in hand-written SQL would fail the
+    * whole load and silently zero the correctness check. */
+  def writeOracleJson(oracles: Map[String, String], path: Path): Unit = {
+    val om = new ObjectMapper()
+    val node = om.createObjectNode()
+    oracles.foreach { case (name, sql) => node.put(name, sql) }
+    om.writeValue(path.toFile, node)
   }
 }

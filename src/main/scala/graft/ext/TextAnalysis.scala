@@ -1191,17 +1191,6 @@ object TextAnalysis {
       "ent", "nt ", " et", "et ", "que", " qu", "ue ", "ion", "ais",
       "ait", " un", "une", "ne ", "our", " po", "pou", "eur"))
 
-  /** Character trigrams of the normalized text: (id, trigram). */
-  def charTrigrams(df: DataFrame, id: String, text: String): DataFrame = {
-    val norm = regexp_replace(lower(col(text)), "[^\\p{L} ]", " ")
-    val squeezed = regexp_replace(norm, " +", " ")
-    df.select(col(id).as("id"), squeezed.as("t"))
-      .filter(length(col("t")) >= 3)
-      .select(col("id"),
-        explode(graft.functions.Strings.charNgrams(col("t"), 3,
-          wholeTextFallback = false)).as("trigram"))
-  }
-
   /** Detected language per document: trigram-profile vote with a CJK
     * codepoint-ratio override.
     *

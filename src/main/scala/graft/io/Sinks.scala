@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 
 /** Result sinks.
   *
@@ -12,9 +12,6 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * nothing forces a full driver materialization.
   */
 object Sinks {
-
-  /** Row-wise JSON strings (distributed; no driver materialization). */
-  def jsonRows(df: DataFrame): Dataset[String] = df.toJSON
 
   /** The reference's HTTP-response shape: a JSON array of row objects,
     * capped at `limit` rows (the reference caps at 100 for viz payloads,

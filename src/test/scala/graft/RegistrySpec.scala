@@ -2,30 +2,36 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Registry completeness — pure JVM, no Spark action: building the
-  * line closures and the static oracle strings needs no session. */
+/** The registry table — pure JVM, no Spark action: building the line
+  * closures and the static oracle strings needs no session. */
 class RegistrySpec extends AnyFunSuite {
 
-  /** Lines that are genuinely not SQL-expressible and so carry no
-    * oracle: the oracle compare checks them rows-only, and a spec pins
-    * them against an exact reference instead. Empty: every line has one. */
-  private val RowsOnly = Set.empty[String]
-
-  private val lines = SparkEntry.queries.keySet
-  private val static = SparkEntry.oracleSql.keySet
-  private val captured = SparkEntry.capturedLines.keySet
-
-  test("queries are exactly the lines with an oracle, plus the rows-only list") {
-    assert(lines === static ++ captured ++ RowsOnly,
-      s"lines without an oracle: ${lines -- static -- captured}; " +
-      s"oracles without a line: ${(static ++ captured) -- lines}")
+  test("no line name appears twice in the registry table") {
+    // the name-keyed views keep only the last of two equal names, so a
+    // copy-pasted name would silently drop a line and its oracle
+    val dups = SparkEntry.lines.groupBy(_._1).collect {
+      case (name, ls) if ls.size > 1 => name }
+    assert(dups.isEmpty, s"names registered twice: ${dups.toSeq.sorted}")
   }
 
-  test("the static and captured oracle sources share no line") {
-    assert((static & captured) === Set.empty)
-  }
-
-  test("a rows-only line has no oracle") {
-    assert((RowsOnly & (static ++ captured)) === Set.empty)
+  test("the table and every static oracle build with no SparkSession") {
+    // Suites share one session per test JVM, so build in a fresh loader
+    // over the same classpath: it shares no Spark state with this one,
+    // and a line or oracle that reached for a session would throw here.
+    val urls = sys.props("java.class.path").split(java.io.File.pathSeparator)
+      .map(p => new java.io.File(p).toURI.toURL)
+    val loader = new java.net.URLClassLoader(urls,
+      ClassLoader.getPlatformClassLoader)
+    try {
+      def call(obj: AnyRef, method: String): AnyRef =
+        obj.getClass.getMethod(method).invoke(obj)
+      def module(name: String): AnyRef =
+        loader.loadClass(name + "$").getField("MODULE$").get(null)
+      val entry = module("graft.SparkEntry")
+      assert(call(call(entry, "lines"), "size") === SparkEntry.lines.size)
+      assert(call(entry, "oracleSql").toString === SparkEntry.oracleSql.toString)
+      val session = module("org.apache.spark.sql.SparkSession")
+      assert(call(call(session, "getDefaultSession"), "isEmpty") === true)
+    } finally loader.close()
   }
 }
