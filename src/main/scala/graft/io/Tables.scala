@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Source readers for the engine.
   *
@@ -9,10 +10,13 @@ import org.apache.spark.sql.types.StructType
   * schema inference (`/root/reference/src/services/processor.rs:253-261`) and
   * re-reads the raw bytes from object storage on every query
   * (`query_translator.rs:232-278`). Here sources are declarative Spark scans:
-  * Catalyst prunes columns and pushes predicates into the file format, and a
-  * table is read once per plan, not once per operation. Parquet is the
-  * primary format (columnar, splittable — the 100 TB path); CSV is kept for
-  * reference parity.
+  * Catalyst prunes columns and pushes predicates into the file format.
+  * Parquet is the primary format (columnar, splittable — the 100 TB path)
+  * and is read once per plan, not once per operation. CSV is kept for
+  * reference parity, and an upload is parsed once per session: the CSV
+  * readers return a frame cached in Spark's columnar store, so the
+  * profile and every question scan in-memory batches instead of
+  * re-running the text parser.
   */
 object Tables {
 
@@ -99,6 +103,14 @@ object Tables {
     * bounds inference cost on large inputs instead of a fixed row window
     * (a row-count window does not distribute — a 100 TB CSV's "first 100
     * rows" live in one task).
+    *
+    * The returned frame is persisted (MEMORY_AND_DISK, lazily): its first
+    * action parses the file into Spark's columnar store and every later
+    * plan over it reads those batches. The caller owns the frame and
+    * calls `unpersist()` when the job or conversation ends. Spark matches
+    * a cached frame by plan, not by file contents, so ingesting a path
+    * again refreshes every cached frame over that path first — a
+    * re-upload is parsed afresh, and older frames see the new rows too.
     */
   def csv(spark: SparkSession, path: String,
           schema: Option[StructType] = None,
@@ -106,13 +118,16 @@ object Tables {
     val base = spark.read
       .option("header", "true")
       .option("mode", "PERMISSIVE") // malformed rows -> nulls, not job failure
-    schema match {
+    val df = schema match {
       case Some(s) => base.schema(s).csv(path)
       case None =>
         base.option("inferSchema", "true")
           .option("samplingRatio", samplingRatio.toString)
           .csv(path)
     }
+    require(df.schema.nonEmpty, s"CSV upload $path has no columns (empty file?)")
+    spark.catalog.refreshByPath(path)
+    df.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Reference-parity inference: schema from the FIRST `rows` data rows
@@ -123,7 +138,8 @@ object Tables {
     * The row window is one bounded read; "first" follows file listing
     * order, which matches the reference's single-file uploads. Use
     * [[csv]] with `samplingRatio` when sampling the whole file is the
-    * better trade.
+    * better trade. The full scan goes through [[csv]], so the returned
+    * frame is cached and owned by the caller the same way.
     */
   def csvInferFirstRows(spark: SparkSession, path: String,
                         rows: Int = 100): DataFrame = {

@@ -728,6 +728,7 @@ object Profiler {
     * Expand — the thing to avoid at very large scale).
     */
   def profile(df: DataFrame, topK: Int = 10, exact: Boolean = true): Insights = {
+    require(df.schema.nonEmpty, "cannot profile a frame with no columns")
     val (numericCols, dateCols, categoricalCols) = classify(df.schema)
     val typeOf = df.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
 

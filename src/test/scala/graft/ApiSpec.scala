@@ -1,8 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 import graft.io.{Sinks, Tables}
+import graft.model.DatasetMetadata
 import graft.profile.Profiler
 
 /** API-surface specs: SQL extension functions, JSON sinks, Insights
@@ -234,6 +240,130 @@ class ApiSpec extends SparkSpec {
     assert(windowed.filter(windowed("a").isNull).count() === 1)
     val whole = Tables.csv(spark, p.toString)
     assert(whole.schema("a").dataType.simpleString === "string")
+  }
+
+  /** Physical operators of `df`'s plan, through AQE's wrapper. */
+  private def operators(df: DataFrame): Seq[SparkPlan] = {
+    object Plans extends AdaptiveSparkPlanHelper
+    Plans.collect(df.queryExecution.executedPlan) { case p => p }
+  }
+
+  private def persistentRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def writeCsv(name: String, body: String): Path = {
+    val p = Files.createTempDirectory("graft-upload").resolve(name)
+    Files.writeString(p, body)
+    p
+  }
+
+  test("csv ingest: a re-upload at the same path reads the new rows") {
+    val p = writeCsv("t.csv", "a,b\n1,x\n2,y\n")
+    val first = Tables.csvInferFirstRows(spark, p.toString)
+    assert(first.count() === 2)
+    Files.writeString(p, "a,b\n1,x\n2,y\n3,z\n4,w\n")
+    val second = Tables.csvInferFirstRows(spark, p.toString)
+    val fresh = Tables.csv(spark, p.toString)
+    try {
+      val rows = (1 to 4).zip(Seq("x", "y", "z", "w")).toSet
+      assert(second.as[(Int, String)].collect().toSet === rows)
+      assert(fresh.as[(Int, String)].collect().toSet === rows)
+      assert(first.count() === 4) // refreshed along with the re-upload
+    } finally Seq(first, second, fresh).foreach(_.unpersist(blocking = true))
+  }
+
+  test("csv ingest: an empty upload fails with a message naming the path") {
+    val empty = writeCsv("empty.csv", "")
+    Seq[String => Any](Tables.csvInferFirstRows(spark, _), Tables.csv(spark, _))
+      .foreach { read =>
+        val e = intercept[IllegalArgumentException](read(empty.toString))
+        assert(e.getMessage.contains(empty.toString))
+      }
+    val e = intercept[IllegalArgumentException](Profiler.profile(spark.emptyDataFrame))
+    assert(e.getMessage.contains("no columns"))
+    // a header with no data rows is a valid, empty table
+    val headerOnly = Tables.csvInferFirstRows(spark,
+      writeCsv("header.csv", "a,b\n").toString)
+    try {
+      val ins = Profiler.profile(headerOnly)
+      assert(ins.dataSummary.rowCount === 0L)
+      assert(ins.columnStatistics.map(_.name) === Seq("a", "b"))
+    } finally headerOnly.unpersist(blocking = true)
+  }
+
+  test("csv ingest: an upload is parsed once; profile and questions never re-read it") {
+    import graft.model._
+    import graft.model.ColumnOperation._
+    import graft.query.{QueryCompiler, QueryJson}
+    val p = writeCsv("mixed.csv",
+      "id,score,city,day\n" +
+        "1,1.5,oslo,2024-01-01\n" +
+        "2,,bergen,2024-01-02\n" +
+        "3,3.5,,2024-01-03\n" +
+        "4,4.5,oslo,\n" +
+        "5,5.5,bergen,2024-01-05\n")
+    val df = Tables.csvInferFirstRows(spark, p.toString)
+    assert(df.schema.fields.map(_.dataType.simpleString).toSeq ===
+      Seq("int", "double", "string", "date"))
+    val before = persistentRdds
+    assert(DatasetMetadata.of(df).rowCount === 5L) // builds the cache
+    val mine = persistentRdds -- before
+    assert(mine.nonEmpty)
+
+    val agg = StructuredQuery(QueryIntent.Aggregate,
+      operations = Seq(GroupBy("city"), Mean("score"), SortBy("city", ascending = true)))
+    val filter = StructuredQuery(QueryIntent.Filter, columns = Seq("id", "day"),
+      operations = Seq(Filter("score", CompareOp.Gt, "2")))
+    val chart = StructuredQuery(QueryIntent.Visualize, columns = Seq("score", "id"))
+    def answers = (Profiler.profile(df),
+      Sinks.jsonArray(QueryCompiler.compile(df, agg)),
+      Sinks.jsonArray(QueryCompiler.compile(df, filter)),
+      QueryJson.vizPayload(QueryCompiler.compile(df, chart)))
+    try {
+      val expected = answers
+      Files.delete(p)
+      assert(answers === expected)
+      assert(expected._1.dataSummary.rowCount === 5L)
+      assert(expected._3 === """[{"id":3,"day":"2024-01-03"},{"id":4},{"id":5,"day":"2024-01-05"}]""")
+      Seq(agg, filter, chart).foreach { q =>
+        val ops = operators(QueryCompiler.compile(df, q))
+        assert(ops.exists(_.isInstanceOf[InMemoryTableScanExec]))
+        assert(!ops.exists(_.isInstanceOf[FileSourceScanExec]))
+      }
+    } finally df.unpersist(blocking = true)
+    assert((persistentRdds intersect mine).isEmpty)
+  }
+
+  test("csv ingest: the cache changes no answer, malformed cells included") {
+    import graft.model._
+    import graft.model.ColumnOperation._
+    import graft.query.QueryCompiler
+    val p = writeCsv("malformed.csv",
+      "id,score,city\n1,1.5,oslo\n2,2.5,bergen\n3,,oslo\n" +
+        "not_an_int,4.5,bergen\n5,5.5,trondheim\n")
+    val cached = Tables.csvInferFirstRows(spark, p.toString, rows = 3)
+    assert(cached.schema("id").dataType.simpleString === "int")
+    val plain = spark.read.option("header", "true").schema(cached.schema).csv(p.toString)
+    try {
+      assert(DatasetMetadata.of(cached).rowCount === 5L)
+      assert(!operators(plain).exists(_.isInstanceOf[InMemoryTableScanExec]))
+      assert(Profiler.profile(cached) === Profiler.profile(plain))
+      val questions = Seq(
+        StructuredQuery(QueryIntent.Aggregate,
+          operations = Seq(GroupBy("city"), Sum("id"), Count("id"))),
+        StructuredQuery(QueryIntent.Filter, columns = Seq("id", "city"),
+          operations = Seq(Filter("score", CompareOp.Ge, "2"))),
+        // reads only the malformed row's well-formed cells
+        StructuredQuery(QueryIntent.Filter, columns = Seq("score", "city"),
+          operations = Seq(Filter("city", CompareOp.Eq, "bergen"))))
+      questions.foreach { q =>
+        def rows(df: DataFrame) =
+          QueryCompiler.compile(df, q).collect().map(_.toString).sorted.toSeq
+        assert(rows(cached) === rows(plain), q)
+      }
+      val bergen = QueryCompiler.compile(cached, questions.last).collect()
+      assert(bergen.map(r => r.getDouble(0)).sorted.toSeq === Seq(2.5, 4.5))
+    } finally cached.unpersist(blocking = true)
   }
 
   test("partitioned compaction: per-dir merge keeps layout and rows") {
