@@ -7,18 +7,33 @@ import org.apache.spark.sql.DataFrame
   * The reference serializes every query result to a JSON array of row
   * objects for its HTTP response (`/root/reference/src/services/
   * conversation.rs:154-166`, `479-506`) by materializing the whole frame
-  * in memory. Here the row→JSON conversion is a distributed projection
-  * (`toJSON`): callers stream it, write it, or take a bounded sample —
-  * nothing forces a full driver materialization.
+  * in memory. Here the row→JSON conversion is an expression inside the
+  * plan (`to_json`), so it runs where the rows are and only the bounded
+  * sample of rendered strings reaches the driver.
   */
 object Sinks {
 
   /** The reference's HTTP-response shape: a JSON array of row objects,
     * capped at `limit` rows (the reference caps at 100 for viz payloads,
     * `query_translator.rs:459-461`). Driver-sized by construction.
+    *
+    * Each row renders as `to_json(struct(*))` inside the plan — the same
+    * Jackson generator and options as `toJSON`, so the text is
+    * byte-identical (null fields omitted), but the limit now sits on top
+    * of one code-generated projection: Spark plans `CollectLimit` (or
+    * `TakeOrderedAndProject` over a sort) with no exchange and no round
+    * trip through external `Row`s — one job, unless the first partition
+    * holds fewer than `limit` rows and more partitions must be read.
+    * Under `toJSON`, a typed map, the limit becomes `LocalLimit →
+    * Exchange → GlobalLimit`: a shuffle and always a second job.
+    * The star expands to the frame's own attributes, so no column name
+    * is parsed: dots, backticks and repeated names are rendered as-is.
     */
-  def jsonArray(df: DataFrame, limit: Int = 100): String =
-    df.limit(limit).toJSON.collect().mkString("[", ",", "]")
+  def jsonArray(df: DataFrame, limit: Int = 100): String = {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    df.select(to_json(struct(col("*")))).limit(limit).collect()
+      .map(_.getString(0)).mkString("[", ",", "]")
+  }
 
   /** File sink: newline-delimited JSON, one object per row. */
   def writeJson(df: DataFrame, path: String): Unit =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Rounding.reprRound4
+import graft.query.QueryCompiler.{column, quote}
 
 /** Dataset profiling — the reference's "insights" engine
   * (`/root/reference/src/services/processor.rs:264-456`), redesigned for
@@ -100,29 +101,29 @@ object Profiler {
       else df.schema.fields.filter(f => isNumeric(f.dataType)).map(_.name).toSeq
     require(cols.nonEmpty, "no numeric columns to profile")
     val pct =
-      if (exact) (c: String) => expr(s"percentile(`$c`, array(0.25, 0.5, 0.75))")
-      else (c: String) => expr(s"approx_percentile(`$c`, array(0.25, 0.5, 0.75), 10000)")
+      if (exact) (c: String) => expr(s"percentile(${quote(c)}, array(0.25, 0.5, 0.75))")
+      else (c: String) => expr(s"approx_percentile(${quote(c)}, array(0.25, 0.5, 0.75), 10000)")
     val aggs: Seq[Column] = cols.flatMap { c =>
       Seq(
-        (count(lit(1)) - count(col(c))).as(s"${c}__nulls"),
-        min(col(c)).cast(DoubleType).as(s"${c}__min"),
-        max(col(c)).cast(DoubleType).as(s"${c}__max"),
-        avg(col(c)).as(s"${c}__mean"),
-        stddev_samp(col(c)).as(s"${c}__std"),
+        (count(lit(1)) - count(column(c))).as(s"${c}__nulls"),
+        min(column(c)).cast(DoubleType).as(s"${c}__min"),
+        max(column(c)).cast(DoubleType).as(s"${c}__max"),
+        avg(column(c)).as(s"${c}__mean"),
+        stddev_samp(column(c)).as(s"${c}__std"),
         pct(c).cast(ArrayType(DoubleType)).as(s"${c}__q"))
     }
     val one = df.agg(aggs.head, aggs.tail: _*)
     val rows = cols.map { c =>
       struct(
         lit(c).as("column"),
-        col(s"${c}__nulls").as("null_count"),
-        col(s"${c}__min").as("min"),
-        col(s"${c}__max").as("max"),
-        col(s"${c}__mean").as("mean"),
-        col(s"${c}__std").as("std_dev"),
-        element_at(col(s"${c}__q"), 1).as("percentile_25"),
-        element_at(col(s"${c}__q"), 2).as("median"),
-        element_at(col(s"${c}__q"), 3).as("percentile_75"))
+        column(s"${c}__nulls").as("null_count"),
+        column(s"${c}__min").as("min"),
+        column(s"${c}__max").as("max"),
+        column(s"${c}__mean").as("mean"),
+        column(s"${c}__std").as("std_dev"),
+        element_at(column(s"${c}__q"), 1).as("percentile_25"),
+        element_at(column(s"${c}__q"), 2).as("median"),
+        element_at(column(s"${c}__q"), 3).as("percentile_75"))
     }
     one.select(explode(array(rows: _*)).as("s")).select("s.*")
   }
@@ -139,19 +140,19 @@ object Profiler {
     require(cols.nonEmpty, "no date/timestamp columns to profile")
     val aggs: Seq[Column] = cols.flatMap { c =>
       Seq(
-        (count(lit(1)) - count(col(c))).as(s"${c}__nulls"),
-        min(col(c)).as(s"${c}__min"),
-        max(col(c)).as(s"${c}__max"),
-        countDistinct(to_date(col(c))).as(s"${c}__days"))
+        (count(lit(1)) - count(column(c))).as(s"${c}__nulls"),
+        min(column(c)).as(s"${c}__min"),
+        max(column(c)).as(s"${c}__max"),
+        countDistinct(to_date(column(c))).as(s"${c}__days"))
     }
     val one = df.agg(aggs.head, aggs.tail: _*)
     val rows = cols.map { c =>
       struct(
         lit(c).as("column"),
-        col(s"${c}__nulls").as("null_count"),
-        col(s"${c}__min").cast("timestamp").as("min_ts"),
-        col(s"${c}__max").cast("timestamp").as("max_ts"),
-        col(s"${c}__days").as("distinct_days"))
+        column(s"${c}__nulls").as("null_count"),
+        column(s"${c}__min").cast("timestamp").as("min_ts"),
+        column(s"${c}__max").cast("timestamp").as("max_ts"),
+        column(s"${c}__days").as("distinct_days"))
     }
     one.select(explode(array(rows: _*)).as("s")).select("s.*")
   }
@@ -160,10 +161,10 @@ object Profiler {
     * a map-side bucket assignment + one aggregation). Buckets are
     * [lo, hi) except the last, which closes at max.
     */
-  def histogramDF(df: DataFrame, column: String, bins: Int = 10): DataFrame = {
+  def histogramDF(df: DataFrame, name: String, bins: Int = 10): DataFrame = {
     require(bins > 0, "bins must be positive")
     val extent = df
-      .agg(min(col(column)).cast(DoubleType), max(col(column)).cast(DoubleType))
+      .agg(min(column(name)).cast(DoubleType), max(column(name)).cast(DoubleType))
       .head()
     if (extent.isNullAt(0)) {
       // empty input or all-NULL column: an empty histogram, not a crash
@@ -175,9 +176,9 @@ object Profiler {
     val (mn, mx) = (extent.getDouble(0), extent.getDouble(1))
     val width = if (mx > mn) (mx - mn) / bins else 1.0
     val bucket = least(
-      floor((col(column).cast(DoubleType) - lit(mn)) / lit(width)).cast("int"),
+      floor((column(name).cast(DoubleType) - lit(mn)) / lit(width)).cast("int"),
       lit(bins - 1))
-    df.filter(col(column).isNotNull)
+    df.filter(column(name).isNotNull)
       .groupBy(bucket.as("bucket"))
       .agg(count(lit(1)).as("count"))
       .select(col("bucket"),
@@ -192,15 +193,15 @@ object Profiler {
     val cols = if (columns.nonEmpty) columns else df.columns.toSeq
     val aggs: Seq[Column] = cols.flatMap { c =>
       Seq(
-        (count(lit(1)) - count(col(c))).as(s"${c}__nulls"),
-        approx_count_distinct(col(c)).as(s"${c}__approx"))
+        (count(lit(1)) - count(column(c))).as(s"${c}__nulls"),
+        approx_count_distinct(column(c)).as(s"${c}__approx"))
     }
     val one = df.agg(aggs.head, aggs.tail: _*)
     val rows = cols.map { c =>
       struct(
         lit(c).as("column"),
-        col(s"${c}__nulls").as("null_count"),
-        col(s"${c}__approx").as("unique_count"))
+        column(s"${c}__nulls").as("null_count"),
+        column(s"${c}__approx").as("unique_count"))
     }
     one.select(explode(array(rows: _*)).as("s")).select("s.*")
   }
@@ -214,19 +215,19 @@ object Profiler {
     val cols = if (columns.nonEmpty) columns else df.columns.toSeq
     val aggs: Seq[Column] = cols.flatMap { c =>
       Seq(
-        (count(lit(1)) - count(col(c))).as(s"${c}__nulls"),
-        countDistinct(col(c)).as(s"${c}__uniq")) ++
-        (if (includeApprox) Seq(approx_count_distinct(col(c)).as(s"${c}__approx"))
+        (count(lit(1)) - count(column(c))).as(s"${c}__nulls"),
+        countDistinct(column(c)).as(s"${c}__uniq")) ++
+        (if (includeApprox) Seq(approx_count_distinct(column(c)).as(s"${c}__approx"))
          else Seq.empty)
     }
     val one = df.agg(aggs.head, aggs.tail: _*)
     val rows = cols.map { c =>
       val base = Seq(
         lit(c).as("column"),
-        col(s"${c}__nulls").as("null_count"),
-        col(s"${c}__uniq").as("unique_count"))
+        column(s"${c}__nulls").as("null_count"),
+        column(s"${c}__uniq").as("unique_count"))
       val fields =
-        if (includeApprox) base :+ col(s"${c}__approx").as("approx_unique_count")
+        if (includeApprox) base :+ column(s"${c}__approx").as("approx_unique_count")
         else base
       struct(fields: _*)
     }
@@ -245,10 +246,10 @@ object Profiler {
       i <- cols.indices; j <- (i + 1) until cols.size
     } yield (cols(i), cols(j))
     require(pairs.nonEmpty, "need at least two numeric columns")
-    val aggs = pairs.map { case (a, b) => corr(col(a), col(b)).as(s"${a}__${b}") }
+    val aggs = pairs.map { case (a, b) => corr(column(a), column(b)).as(s"${a}__${b}") }
     val one = df.agg(aggs.head, aggs.tail: _*)
     val rows = pairs.map { case (a, b) =>
-      struct(lit(s"$a-$b").as("pair"), col(s"${a}__${b}").as("correlation"))
+      struct(lit(s"$a-$b").as("pair"), column(s"${a}__${b}").as("correlation"))
     }
     one.select(explode(array(rows: _*)).as("s")).select("s.*")
   }
@@ -259,9 +260,9 @@ object Profiler {
     * rows, then a driver-side k-row sort — safe at any scale where the
     * column is meaningfully categorical.
     */
-  def frequentValuesDF(df: DataFrame, column: String, k: Int = 10): DataFrame =
-    df.filter(col(column).isNotNull)
-      .groupBy(col(column).cast(StringType).as("value"))
+  def frequentValuesDF(df: DataFrame, name: String, k: Int = 10): DataFrame =
+    df.filter(column(name).isNotNull)
+      .groupBy(column(name).cast(StringType).as("value"))
       .agg(count(lit(1)).as("count"))
       .orderBy(col("count").desc, col("value").asc)
       .limit(k)
@@ -382,7 +383,7 @@ object Profiler {
                           k: Int = 10): DataFrame = {
     require(columns.nonEmpty, "no columns requested")
     val pairs = df.select(explode(array(columns.map(c =>
-        struct(lit(c).as("column"), col(c).cast(StringType).as("value"))): _*))
+        struct(lit(c).as("column"), column(c).cast(StringType).as("value"))): _*))
         .as("p"))
       .select("p.*")
       .filter(col("value").isNotNull)

@@ -92,14 +92,15 @@ object QueryCompiler {
     */
   private def predicate(df: DataFrame, c: String, op: CompareOp, v: String): Column = {
     val dt = df.schema(c).dataType
+    val x = column(c)
     val l = typedLit(v, dt)
     op match {
-      case CompareOp.Eq => col(c) === l
-      case CompareOp.Ne => col(c) =!= l
-      case CompareOp.Gt => col(c) > l
-      case CompareOp.Lt => col(c) < l
-      case CompareOp.Ge => col(c) >= l
-      case CompareOp.Le => col(c) <= l
+      case CompareOp.Eq => x === l
+      case CompareOp.Ne => x =!= l
+      case CompareOp.Gt => x > l
+      case CompareOp.Lt => x < l
+      case CompareOp.Ge => x >= l
+      case CompareOp.Le => x <= l
     }
   }
 
@@ -113,18 +114,18 @@ object QueryCompiler {
     * `query_translator.rs:326,333,340,346`).
     */
   private def applyAggregate(df: DataFrame, ops: Seq[ColumnOperation]): DataFrame = {
-    val groupCols = ops.collect { case GroupBy(c) => col(c) }
+    val groupCols = ops.collect { case GroupBy(c) => column(c) }
     val aggExprs = ops.collect {
-      case Mean(c)  => avg(col(c)).as(s"mean_$c")
-      case Sum(c)   => sum(col(c)).as(s"sum_$c")
-      case Count(c) => count(col(c)).as(s"count_$c")
+      case Mean(c)  => avg(column(c)).as(s"mean_$c")
+      case Sum(c)   => sum(column(c)).as(s"sum_$c")
+      case Count(c) => count(column(c)).as(s"count_$c")
     }
     val exprs =
       if (aggExprs.nonEmpty) aggExprs
       else {
         // GroupBy with no explicit agg: reference counts the group key
         // (`query_translator.rs:343-351`).
-        ops.collect { case GroupBy(c) => count(col(c)).as(s"count_$c") }
+        ops.collect { case GroupBy(c) => count(column(c)).as(s"count_$c") }
       }
     if (groupCols.nonEmpty) df.groupBy(groupCols: _*).agg(exprs.head, exprs.tail: _*)
     else df.agg(exprs.head, exprs.tail: _*)
@@ -132,13 +133,13 @@ object QueryCompiler {
 
   private def applySorts(df: DataFrame, ops: Seq[ColumnOperation]): DataFrame = {
     val sortCols = ops.collect {
-      case SortBy(c, asc) => if (asc) col(c).asc else col(c).desc
+      case SortBy(c, asc) => if (asc) column(c).asc else column(c).desc
     }
     if (sortCols.nonEmpty) df.orderBy(sortCols: _*) else df
   }
 
   private def project(df: DataFrame, columns: Seq[String]): DataFrame =
-    if (columns.isEmpty) df else df.select(columns.map(col): _*)
+    if (columns.isEmpty) df else df.select(columns.map(column): _*)
 
   // --------------------------------------------------------------------
   // Visualization aggregations — engine-side DataFrame ops replacing the
@@ -149,24 +150,37 @@ object QueryCompiler {
     * (≤100-row) JSON sample coercing strings to f64
     * (`/root/reference/src/services/conversation.rs:188-232`); here it is
     * one distributed agg over the full table — `try_cast` keeps the
-    * "skip unparseable" behavior without ANSI failures.
+    * "skip unparseable" behavior without ANSI failures. The chart of an
+    * answer ([[QueryJson.vizPayload]]) computes the same means on the
+    * driver from the rows it already collected.
     */
   def vizNumericAverages(df: DataFrame, cols: Seq[String] = Seq.empty): DataFrame = {
     val numeric =
       if (cols.nonEmpty) cols
       else df.schema.fields.collect { case f if isNumeric(f.dataType) => f.name }.toSeq
     require(numeric.nonEmpty, "no numeric columns to average")
-    val exprs = numeric.map(c => avg(expr(s"try_cast(`$c` AS double)")).as(s"avg_$c"))
+    val exprs = numeric.map(c => avg(expr(s"try_cast(${quote(c)} AS double)")).as(s"avg_$c"))
     df.agg(exprs.head, exprs.tail: _*)
   }
 
   /** A14: value counts of a categorical column for a bar chart
     * (`conversation.rs:235-268`), as groupBy-count (deterministically
-    * ordered, unlike the reference's map iteration).
+    * ordered, unlike the reference's map iteration). [[QueryJson.vizPayload]]
+    * counts its collected sample in the same order on the driver.
     */
-  def vizValueCounts(df: DataFrame, column: String): DataFrame =
-    df.groupBy(col(column)).agg(count(lit(1)).as("count"))
-      .orderBy(col("count").desc, col(column).asc)
+  def vizValueCounts(df: DataFrame, name: String): DataFrame =
+    df.groupBy(column(name)).agg(count(lit(1)).as("count"))
+      .orderBy(col("count").desc, column(name).asc)
+
+  /** A column name as a backtick-quoted identifier: `col` and SQL text
+    * otherwise read `unit.price` as struct access and reject a name
+    * holding a backtick. The compiler and the profile helpers reference
+    * user-supplied names (CSV headers, NL-resolved columns) through it. */
+  private[graft] def quote(name: String): String =
+    "`" + name.replace("`", "``") + "`"
+
+  /** The column named exactly `name` (see [[quote]]). */
+  private[graft] def column(name: String): Column = col(quote(name))
 
   private[graft] def isNumeric(dt: DataType): Boolean = dt match {
     case _: ByteType | _: ShortType | _: IntegerType | _: LongType |

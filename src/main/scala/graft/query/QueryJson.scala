@@ -1,9 +1,12 @@
 package graft.query
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ArrayNode
 
 import graft.model._
 import graft.model.ColumnOperation._
@@ -127,55 +130,58 @@ object QueryJson {
     * `{"type":"bar","data":{"labels":[...],"datasets":[{"label":...,
     * "data":[...]}]},"options":{}}`.
     *
-    * Where the reference iterates its ≤100-row JSON sample driver-side,
-    * the aggregates here are the DISTRIBUTED A13/A14 ops
-    * ([[QueryCompiler.vizNumericAverages]] / [[QueryCompiler.vizValueCounts]])
-    * over the full table — only the chart-sized result is collected.
+    * Like the reference, the chart is built on the driver from the
+    * first `limit` rows (compile already caps a Visualize plan at the
+    * reference's 100), collected in ONE action: a limit on top of the
+    * plan runs as `CollectLimit` (see [[graft.io.Sinks.jsonArray]]), with
+    * no exchange. Aggregating
+    * under the limit instead (the distributed
+    * [[QueryCompiler.vizNumericAverages]] / [[QueryCompiler.vizValueCounts]])
+    * costs a single-partition shuffle and a second job for at most 100
+    * rows; the results are the same:
+    *  - averages: each numeric column's non-null values as doubles,
+    *    summed in row order from 0.0 and divided by their count —
+    *    Spark's `avg` over the one partition the limit leaves; a column
+    *    of all-null cells averages to 0.0, the reference's count == 0
+    *    branch (`conversation.rs:216-220`);
+    *  - value counts: count desc, then label asc with null first,
+    *    labels compared by UTF-8 bytes (Spark's string order) —
+    *    deterministic, unlike the reference's map-iteration order.
     * The chooser reads the schema, not sampled values (a numeric column
     * is numeric by type; the reference's parse-a-string-cell heuristic
-    * exists because its pipeline is stringly typed). Value counts keep
-    * the top `maxLabels` bars (count desc, label asc — deterministic,
-    * unlike the reference's map-iteration order); the table fallback
-    * keeps `maxLabels` rows, mirroring the reference's 100-row viz cap.
+    * exists because its pipeline is stringly typed).
     */
-  def vizPayload(df: org.apache.spark.sql.DataFrame,
-                 maxLabels: Int = 100): String = {
+  def vizPayload(df: org.apache.spark.sql.DataFrame, limit: Int = 100): String = {
     import org.apache.spark.sql.types.StringType
+    val sample = df.limit(limit).collect()
+    val fields = df.schema.fields.toSeq.zipWithIndex
+    val numeric = fields.filter { case (f, _) => QueryCompiler.isNumeric(f.dataType) }
+    val strings = fields.filter { case (f, _) => f.dataType == StringType }
     val root = mapper.createObjectNode()
-    val numeric = df.schema.fields
-      .collect { case f if QueryCompiler.isNumeric(f.dataType) => f.name }
-    val strings = df.schema.fields
-      .collect { case f if f.dataType == StringType => f.name }
+    def bars(labels: Seq[String], label: String, values: ArrayNode): Unit = {
+      root.put("type", "bar")
+      val data = root.putObject("data")
+      val ls = data.putArray("labels")
+      labels.foreach(ls.add)
+      val ds = data.putArray("datasets").addObject()
+      ds.put("label", label)
+      ds.set[JsonNode]("data", values)
+    }
     if (numeric.nonEmpty) {
-      val row = QueryCompiler.vizNumericAverages(df, numeric.toSeq).head()
-      root.put("type", "bar")
-      val data = root.putObject("data")
-      val labels = data.putArray("labels")
-      numeric.foreach(labels.add)
-      val ds = data.putArray("datasets").addObject()
-      ds.put("label", "Average")
-      val vals = ds.putArray("data")
-      numeric.indices.foreach { i =>
-        // a column of all-null cells averages to SQL NULL; the reference
-        // emits 0.0 there (count == 0 branch, conversation.rs:216-220)
-        if (row.isNullAt(i)) vals.add(0.0) else vals.add(row.getDouble(i))
-      }
-      root.putObject("options")
-    } else if (strings.nonEmpty) {
-      val c = strings.head
-      val counts = QueryCompiler.vizValueCounts(df, c).limit(maxLabels).collect()
-      root.put("type", "bar")
-      val data = root.putObject("data")
-      val labels = data.putArray("labels")
-      val ds = data.putArray("datasets").addObject()
-      ds.put("label", s"$c count")
       val vals = mapper.createArrayNode()
-      counts.foreach { r =>
-        labels.add(if (r.isNullAt(0)) null else r.getString(0))
-        vals.add(r.getLong(1))
+      numeric.foreach { case (_, i) =>
+        val xs = sample.filterNot(_.isNullAt(i)).map(_.getAs[Number](i).doubleValue())
+        vals.add(if (xs.isEmpty) 0.0 else xs.foldLeft(0.0)(_ + _) / xs.length)
       }
-      ds.set[JsonNode]("data", vals)
-      root.putObject("options")
+      bars(numeric.map(_._1.name), "Average", vals)
+    } else if (strings.nonEmpty) {
+      val (f, i) = strings.head
+      val counts = sample.groupMapReduce(r => Option(r.getString(i)))(_ => 1L)(_ + _)
+        .toSeq.sortWith { case ((a, n), (b, m)) =>
+          n > m || n == m && labelBefore(a, b) }
+      val vals = mapper.createArrayNode()
+      counts.foreach { case (_, n) => vals.add(n) }
+      bars(counts.map(_._1.orNull), s"${f.name} count", vals)
     } else {
       // no chartable columns: table config (conversation.rs:271-286).
       // Cells serialize as typed JSON VALUES (the reference's serde
@@ -187,14 +193,25 @@ object QueryJson {
       val cols = data.putArray("columns")
       df.columns.foreach(cols.add)
       val rows = data.putArray("rows")
-      df.limit(maxLabels).collect().foreach { r =>
+      sample.foreach { r =>
         val arr = rows.addArray()
         df.columns.indices.foreach(i => arr.add(cellNode(r.get(i))))
       }
-      root.putObject("options")
     }
+    root.putObject("options")
     mapper.writeValueAsString(root)
   }
+
+  /** Spark's ascending string order with nulls first: unsigned UTF-8
+    * bytes, which differs from `String.compareTo`'s UTF-16 units once a
+    * supplementary code point meets U+E000..U+FFFF. */
+  private def labelBefore(a: Option[String], b: Option[String]): Boolean =
+    (a, b) match {
+      case (None, _) => b.nonEmpty
+      case (_, None) => false
+      case (Some(x), Some(y)) =>
+        java.util.Arrays.compareUnsigned(x.getBytes(UTF_8), y.getBytes(UTF_8)) < 0
+    }
 
   /** One table cell as a typed JSON node (see the table branch above).
     * Temporal and other scalar types render via toString — their SQL

@@ -1,15 +1,26 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentLinkedQueue, Semaphore, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.io.{Sinks, Tables}
-import graft.model.DatasetMetadata
+import graft.model._
+import graft.model.ColumnOperation._
 import graft.profile.Profiler
+import graft.query.{NLTranslator, QueryCompiler, QueryJson}
 
 /** API-surface specs: SQL extension functions, JSON sinks, Insights
   * serialization, CSV ingestion. */
@@ -35,7 +46,7 @@ class ApiSpec extends SparkSpec {
 
   test("vizPayload: numeric path is the reference's averages bar chart") {
     val df = Seq((1.0, 10L, "a"), (3.0, 30L, "b")).toDF("x", "y", "s")
-    val json = graft.query.QueryJson.vizPayload(df)
+    val json = QueryJson.vizPayload(df)
     assert(json ===
       """{"type":"bar","data":{"labels":["x","y"],""" +
         """"datasets":[{"label":"Average","data":[2.0,20.0]}]},"options":{}}""")
@@ -43,7 +54,7 @@ class ApiSpec extends SparkSpec {
 
   test("vizPayload: categorical path counts the first string column") {
     val df = Seq(("a", "z"), ("b", "z"), ("a", "z")).toDF("k", "k2")
-    val json = graft.query.QueryJson.vizPayload(df)
+    val json = QueryJson.vizPayload(df)
     assert(json ===
       """{"type":"bar","data":{"labels":["a","b"],""" +
         """"datasets":[{"label":"k count","data":[2,1]}]},"options":{}}""")
@@ -51,8 +62,8 @@ class ApiSpec extends SparkSpec {
 
   test("vizPayload: no chartable columns falls back to a table config") {
     val df = Seq(Tuple1(Array(1.0))).toDF("v")
-    val json = graft.query.QueryJson.vizPayload(df)
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val json = QueryJson.vizPayload(df)
+    val node = new ObjectMapper().readTree(json)
     assert(node.get("type").asText() === "table")
     assert(node.at("/data/columns/0").asText() === "v")
     assert(node.at("/data/rows").size() === 1)
@@ -60,7 +71,7 @@ class ApiSpec extends SparkSpec {
 
   test("vizPayload: all-null numeric column averages to 0.0 like the reference") {
     val df = Seq((None: Option[Double], "a")).toDF("x", "s")
-    val json = graft.query.QueryJson.vizPayload(df)
+    val json = QueryJson.vizPayload(df)
     assert(json.contains(""""data":[0.0]"""))
   }
 
@@ -93,7 +104,6 @@ class ApiSpec extends SparkSpec {
   }
 
   test("AISummary: fallback policy and serialized shape match the reference") {
-    import graft.model.{AISummary, VisualizationRecommendation}
     // empty result and outright failure both resolve to the fallback
     val empty = AISummary("  ", Nil, Nil, Nil)
     assert(empty.isEmpty)
@@ -243,9 +253,12 @@ class ApiSpec extends SparkSpec {
   }
 
   /** Physical operators of `df`'s plan, through AQE's wrapper. */
-  private def operators(df: DataFrame): Seq[SparkPlan] = {
+  private def operators(df: DataFrame): Seq[SparkPlan] =
+    operators(df.queryExecution.executedPlan)
+
+  private def operators(plan: SparkPlan): Seq[SparkPlan] = {
     object Plans extends AdaptiveSparkPlanHelper
-    Plans.collect(df.queryExecution.executedPlan) { case p => p }
+    Plans.collect(plan) { case p => p }
   }
 
   private def persistentRdds: Set[Int] =
@@ -292,9 +305,6 @@ class ApiSpec extends SparkSpec {
   }
 
   test("csv ingest: an upload is parsed once; profile and questions never re-read it") {
-    import graft.model._
-    import graft.model.ColumnOperation._
-    import graft.query.{QueryCompiler, QueryJson}
     val p = writeCsv("mixed.csv",
       "id,score,city,day\n" +
         "1,1.5,oslo,2024-01-01\n" +
@@ -335,9 +345,6 @@ class ApiSpec extends SparkSpec {
   }
 
   test("csv ingest: the cache changes no answer, malformed cells included") {
-    import graft.model._
-    import graft.model.ColumnOperation._
-    import graft.query.QueryCompiler
     val p = writeCsv("malformed.csv",
       "id,score,city\n1,1.5,oslo\n2,2.5,bergen\n3,,oslo\n" +
         "not_an_int,4.5,bergen\n5,5.5,trondheim\n")
@@ -384,6 +391,260 @@ class ApiSpec extends SparkSpec {
     // partition column survives as a directory-derived column
     assert(back.select("lang").distinct().as[String].collect().toSet
       === Set("en", "fr", "de"))
+  }
+
+  /** Runs `body` and returns the jobs it started and the executed plans
+    * of the SQL actions it ran. Listener events arrive asynchronously but
+    * in order, so a tagged sentinel job flushes them: once its end has
+    * been delivered, so has every event posted before it. */
+  private def traced(body: => Any): (Int, Seq[SparkPlan]) = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.phase"
+    val jobs = new AtomicInteger
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val drained = new Semaphore(0)
+    val counter = new SparkListener {
+      private var sentinel = -1 // touched only on the bus thread
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)).orNull match {
+          case "body" => jobs.incrementAndGet()
+          case "flush" => sentinel = e.jobId
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinel) drained.release()
+    }
+    val planner = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def flush(): Unit = {
+      sc.setLocalProperty(tag, "flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.tryAcquire(30, TimeUnit.SECONDS), "listener bus did not drain")
+    }
+    sc.addSparkListener(counter)
+    spark.listenerManager.register(planner)
+    try {
+      flush()
+      jobs.set(0); plans.clear()
+      sc.setLocalProperty(tag, "body")
+      body
+      flush()
+      (jobs.get, plans.asScala.toSeq)
+    } finally {
+      sc.setLocalProperty(tag, null)
+      spark.listenerManager.unregister(planner)
+      sc.removeSparkListener(counter)
+    }
+  }
+
+  private def oldJsonArray(df: DataFrame, n: Int): String =
+    df.limit(n).toJSON.collect().mkString("[", ",", "]")
+
+  /** Rows of hostile cells across three partitions: every JSON-escaping,
+    * number-rendering and nesting case `toJSON` meets, under column
+    * names holding dots, backticks, quotes, spaces and a repeated name. */
+  private def hostileFrame(rows: Int): DataFrame = {
+    val schema = StructType(Seq(
+      StructField("id", IntegerType),
+      StructField("unit.price", DoubleType),
+      StructField("a`b", StringType),
+      StructField("say \"hi\"", DecimalType(12, 3)),
+      StructField("day", DateType),
+      StructField("at", TimestampType),
+      StructField("xs", ArrayType(DoubleType)),
+      StructField("m", MapType(StringType, LongType)),
+      StructField("s", StructType(Seq(
+        StructField("in.ner", StringType),
+        StructField("deep", StructType(Seq(StructField("x", FloatType))))))),
+      StructField("id", LongType)))
+    val doubles = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      -0.0, 0.0, 1e-300, 1.7976931348623157e308, 0.1 + 0.2)
+    val texts = Seq("plain", "tab\tnew\nline", "\u000b vt", "quote \" back \\",
+      "\ud83d\ude00 smile", "\ud800\udc00 U+10000", "caf\u00e9", "", "\u2028")
+    val data = (0 until rows).map[Row] { i =>
+      def nth[T](xs: Seq[T]): T = xs(i % xs.size)
+      def orNull[T](v: T): Any = if (i % 7 == 3) null else v
+      Row(orNull(i), orNull(nth(doubles)), orNull(nth(texts)),
+        orNull(java.math.BigDecimal.valueOf(i * 7919L - 400000, 3)),
+        orNull(java.sql.Date.valueOf(java.time.LocalDate.of(1969, 12, 31).plusDays(i))),
+        orNull(new java.sql.Timestamp(-1000L + i * 86400123L)),
+        orNull(Seq(nth(doubles), null, i.toDouble)),
+        orNull(Map(nth(texts) -> i.toLong, "k" -> null)),
+        orNull(Row(if (i % 3 == 0) null else nth(texts), Row(if (i % 5 == 0) null else i * 0.1f))),
+        if (i % 4 == 0) null else Long.MaxValue - i)
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(data, 3), schema)
+  }
+
+  test("jsonArray renders toJSON's bytes with no exchange and no Row round trip") {
+    val df = hostileFrame(150)
+    Seq(0, 1, 100).foreach { n =>
+      val want = oldJsonArray(df, n)
+      val (jobs, plans) = traced(assert(Sinks.jsonArray(df, n) === want, s"n = $n"))
+      assert(plans.size === 1, s"n = $n")
+      val ops = plans.flatMap(operators)
+      assert(!ops.exists(_.isInstanceOf[ShuffleExchangeExec]), s"n = $n: $plans")
+      assert(!ops.exists(_.isInstanceOf[DeserializeToObjectExec]), s"n = $n: $plans")
+      assert(n == 0 || jobs >= 1)
+    }
+    assert(new ObjectMapper().readTree(Sinks.jsonArray(df, 100)).size() === 100)
+  }
+
+  test("jsonArray answers compiled questions as toJSON did") {
+    val raw = hostileFrame(150) // a repeated name cannot be referenced
+    val df = raw.toDF(raw.columns.toSeq.init :+ "big": _*).drop("s", "m")
+    val mapper = new ObjectMapper()
+    val unsorted = Seq(
+      StructuredQuery(QueryIntent.Filter, columns = Seq("id", "unit.price", "a`b"),
+        operations = Seq(Filter("id", CompareOp.Gt, "10"))),
+      StructuredQuery(QueryIntent.Describe),
+      StructuredQuery(QueryIntent.Aggregate,
+        operations = Seq(GroupBy("a`b"), Mean("unit.price"), Count("id"))))
+    unsorted.foreach { q =>
+      val plan = QueryCompiler.compile(df, q)
+      val rows = (s: String) => mapper.readTree(s).elements().asScala.map(_.toString).toSeq
+      if (q.intent == QueryIntent.Aggregate) // group order is the exchange's
+        assert(rows(Sinks.jsonArray(plan)).sorted === rows(oldJsonArray(plan, 100)).sorted, q)
+      else assert(Sinks.jsonArray(plan) === oldJsonArray(plan, 100), q)
+    }
+    // ties in the sort key may come out in another order: compare keys
+    // (-0.0 and 0.0 are one key)
+    Seq("unit.price" -> true, "say \"hi\"" -> false, "day" -> true).foreach { case (c, asc) =>
+      val plan = QueryCompiler.compile(df, StructuredQuery(QueryIntent.Sort,
+        operations = Seq(SortBy(c, asc))))
+      val keys = (s: String) => mapper.readTree(s).elements().asScala
+        .map(r => Option(r.get(c)).map(_.toString).map(k => if (k == "-0.0") "0.0" else k)).toSeq
+      val got = Sinks.jsonArray(plan)
+      assert(keys(got) === keys(oldJsonArray(plan, 100)), c)
+      assert(mapper.readTree(got).size() === 100)
+    }
+  }
+
+  /** The chart the distributed ops draw over `df.limit(100)`: today's
+    * vizPayload before it collected the sample itself. */
+  private def referenceChart(df: DataFrame): (Seq[String], Seq[Double]) = {
+    val sample = df.limit(100)
+    val numeric = df.schema.fields.filter(f => QueryCompiler.isNumeric(f.dataType)).map(_.name)
+    if (numeric.nonEmpty) {
+      val r = QueryCompiler.vizNumericAverages(sample, numeric.toSeq).head()
+      (numeric.toSeq, numeric.indices.map(i => if (r.isNullAt(i)) 0.0 else r.getDouble(i)))
+    } else {
+      val c = df.schema.fields.find(_.dataType == StringType).get.name
+      val counts = QueryCompiler.vizValueCounts(sample, c).collect()
+      (counts.map(_.getString(0)).toSeq, counts.map(_.getLong(1).toDouble).toSeq)
+    }
+  }
+
+  /** Labels and values of a bar chart; counts are small, exact doubles. */
+  private def chartOf(json: String): (Seq[String], Seq[Double]) = {
+    val node = new ObjectMapper().readTree(json)
+    val labels = node.at("/data/labels").elements().asScala
+      .map(n => if (n.isNull) null else n.asText()).toSeq
+    val data = node.at("/data/datasets/0/data").elements().asScala
+      .map(_.asDouble()).toSeq
+    (labels, data)
+  }
+
+  test("vizPayload draws the chart the distributed ops drew over the sample") {
+    val numSchema = StructType(Seq(
+      StructField("i", IntegerType), StructField("l", LongType),
+      StructField("d", DoubleType), StructField("dec", DecimalType(14, 4)),
+      StructField("f", FloatType), StructField("none", DoubleType),
+      StructField("s", StringType)))
+    val numRows = (0 until 250).map { i =>
+      Row(if (i % 9 == 0) null else i * 37 - 900,
+        if (i % 11 == 0) null else Long.MaxValue / 3 - i * 1234567L,
+        if (i % 13 == 0) null else math.sin(i) * 1e3 + 1e-7 * i,
+        if (i % 17 == 0) null else java.math.BigDecimal.valueOf(i * 1234567L + 89, 4),
+        if (i % 5 == 0) null else (i * 0.1f),
+        null, s"s$i")
+    }
+    // "\ufffd" sorts before the emoji by UTF-8 bytes, after it by UTF-16
+    val labels = Seq("b", "a", null, "\ufffd", "\ud83d\ude00", "a", "c", null, "\ud83d\ude00", "\ufffd")
+    val catSchema = StructType(Seq(StructField("day", DateType),
+      StructField("label", StringType), StructField("other", StringType)))
+    val catRows = (0 until 250).map { i =>
+      Row(java.sql.Date.valueOf("2024-01-01"), if (i < 100) labels(i % labels.size) else "late", "x")
+    }
+    Seq(numSchema -> numRows, catSchema -> catRows).foreach { case (schema, rows) =>
+      Seq(37, 250).foreach { n =>
+        val df = spark.createDataFrame(spark.sparkContext.parallelize(rows.take(n), 3), schema)
+        val got = chartOf(QueryJson.vizPayload(df))
+        val want = referenceChart(df)
+        assert(got._1 === want._1)
+        // exact: same values summed in the same order
+        assert(got._2.map(java.lang.Double.doubleToLongBits) ===
+          want._2.map(java.lang.Double.doubleToLongBits), s"$schema $n")
+      }
+    }
+    val cat = chartOf(QueryJson.vizPayload(
+      spark.createDataFrame(spark.sparkContext.parallelize(catRows, 3), catSchema)))
+    assert(cat === ((Seq(null, "a", "\ufffd", "\ud83d\ude00", "b", "c"),
+      Seq(20.0, 20.0, 20.0, 20.0, 10.0, 10.0))))
+  }
+
+  /** A cached upload like an insights session's, `DatasetMetadata.of` run. */
+  private def upload(name: String, body: String): DataFrame = {
+    val df = Tables.csvInferFirstRows(spark, writeCsv(name, body).toString)
+    DatasetMetadata.of(df)
+    df
+  }
+
+  test("one action per answer: rows, sort, describe and chart each run one job") {
+    val df = upload("sales.csv", "id,price,region\n" +
+      (1 to 500).map(i => s"$i,${i % 37}.5,r${i % 6}").mkString("\n") + "\n")
+    try {
+      val questions = Seq(
+        StructuredQuery(QueryIntent.Filter, columns = Seq("id", "region"),
+          operations = Seq(Filter("price", CompareOp.Gt, "2"))),
+        StructuredQuery(QueryIntent.Sort, operations = Seq(SortBy("price", ascending = false))),
+        StructuredQuery(QueryIntent.Describe),
+        StructuredQuery(QueryIntent.Describe, operations = Seq(SortBy("id", ascending = false))))
+      questions.foreach { q =>
+        val plan = QueryCompiler.compile(df, q)
+        assert(traced(Sinks.jsonArray(plan))._1 === 1, q)
+      }
+      Seq(Seq("price", "id"), Seq("region")).foreach { cols =>
+        val plan = QueryCompiler.compile(df, StructuredQuery(QueryIntent.Visualize, columns = cols))
+        assert(traced(QueryJson.vizPayload(plan))._1 === 1, cols)
+      }
+    } finally df.unpersist(blocking = true)
+  }
+
+  test("column names with dots, backticks and spaces answer like plain names") {
+    val names = Seq("unit.price" -> "unitprice", "a`b" -> "ab", "region name" -> "region")
+    val body = (1 to 60).map(i =>
+      s"${i % 7}.25,${i % 4},${Seq("north", "south", "east")(i % 3)}").mkString("\n") + "\n"
+    val odd = upload("odd.csv", names.map(_._1).mkString(",") + "\n" + body)
+    val plain = upload("plain.csv", names.map(_._2).mkString(",") + "\n" + body)
+    def rename(s: String) = names.foldLeft(s) { case (t, (o, p)) => t.replace(o, p) }
+    try {
+      assert(odd.columns.toSeq === names.map(_._1))
+      val (a, b) = (Profiler.profile(odd), Profiler.profile(plain))
+      assert(a.columnStatistics.map(c => c.copy(name = rename(c.name))) === b.columnStatistics)
+      assert(a.correlations.map { case (k, v) => rename(k) -> v } === b.correlations)
+      assert(rename(a.dataSummary.toString) === b.dataSummary.toString)
+      Seq("average unit.price by region name" -> "average unitprice by region",
+        "show rows where unit.price > 2" -> "show rows where unitprice > 2",
+        "sort by unit.price" -> "sort by unitprice",
+        "chart unit.price and a`b" -> "chart unitprice and ab",
+        "chart region name" -> "chart region").foreach { case (o, p) =>
+        def answer(df: DataFrame, text: String) = {
+          val q = NLTranslator.translate(text, df.schema)
+          val plan = QueryCompiler.compile(df, q)
+          (q.intent, if (q.intent == QueryIntent.Visualize) QueryJson.vizPayload(plan)
+                     else Sinks.jsonArray(plan))
+        }
+        val (oq, oa) = answer(odd, o)
+        val (pq, pa) = answer(plain, p)
+        assert(oq === pq, o)
+        assert(rename(oa) === pa, o)
+        assert(oa.contains(names.find(n => o.contains(n._1)).get._1), o)
+      }
+    } finally Seq(odd, plain).foreach(_.unpersist(blocking = true))
   }
 
   test("GraftSession clone carries the zstd parquet codec") {
